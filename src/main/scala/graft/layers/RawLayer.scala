@@ -79,7 +79,6 @@ object RawLayer {
       .withColumn("source_file", lit(sourcePath))
       .withColumn("ingestion_ts", ts)
     cat.appendByName(finalDf, layer, table,
-      partitionCols = Seq("Country_Region"),
-      sortCols = Seq("Country_Region"))
+      partitionCols = Seq("Country_Region"))
   }
 }

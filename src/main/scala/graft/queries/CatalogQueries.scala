@@ -133,18 +133,20 @@ object CatalogQueries {
        |FROM nation, (VALUES ('csv'), ('json'), ('orc'), ('parquet')) f(fmt)
        |GROUP BY f.fmt""".stripMargin
 
-  /** q172 — snapshot versioning / time travel through
-    * [[graft.runtime.Catalog]] (`versions` retention + `readVersion` +
-    * `changesBetween`): three successive states of a balance table
-    * (base → +1000 on every 3rd key → drop every 5th key); the query
-    * reads BOTH retained versions, the live table, and the op-tagged
-    * changelog between the retained versions, and summarizes each.
-    * DuckDB recomputes every state from the raw table, so a versioning
-    * bug (wrong archive, wrong diff direction, lost rows) breaks the
-    * hash.
+  /** q172 — time travel over the commit journal through the object
+    * API's name-addressed writes: three successive full-replace states
+    * of a balance table (base → +1000 on every 3rd key → drop every
+    * 5th key) land through [[graft.runtime.Catalog
+    * .createOrReplaceByName]], one journaled commit each. The query
+    * reads the first two states back as `VERSION AS OF 'c<id>'`
+    * snapshots (ids from `<t>.commits`), the live table, and the
+    * op-tagged multiset diff between the two snapshots (exceptAll both
+    * ways), and summarizes each. DuckDB recomputes every state from
+    * the raw table, so a journal bug (wrong snapshot, wrong diff
+    * direction, lost rows) breaks the hash.
     */
   def q172TimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val cat = Catalog(spark, scratch("graft-q172"), versions = 4)
+    val cat = Catalog(spark, scratch("graft-q172"))
     val base = Tables.load(spark, dir, "customer")
       .select(col("c_custkey").as("k"),
         expr("cast(round(c_acctbal * 100) as long)").as("bal"),
@@ -152,23 +154,29 @@ object CatalogQueries {
     val stateB = base.withColumn("bal",
       when(col("k") % 3 === 0, col("bal") + 1000L).otherwise(col("bal")))
     val stateC = stateB.filter(col("k") % 5 =!= 0)
-    cat.createOrReplace(base, "ods", "hist")
-    cat.createOrReplace(stateB, "ods", "hist")
-    cat.createOrReplace(stateC, "ods", "hist")
-    val hist = cat.history("ods", "hist")
+    cat.createOrReplaceByName(base, "ods", "hist")
+    cat.createOrReplaceByName(stateB, "ods", "hist")
+    cat.createOrReplaceByName(stateC, "ods", "hist")
+    val ident = cat.sqlIdent("ods", "hist")
+    val ids = spark.table(s"$ident.commits").orderBy("commit_id")
+      .collect().map(_.getLong(0)).toSeq
+    require(ids.length == 3, s"q172: expected three commits, got $ids")
+    def at(id: Long): DataFrame =
+      spark.sql(s"SELECT k, bal, seg FROM $ident VERSION AS OF 'c$id'")
+    val (first, second) = (at(ids(0)), at(ids(1)))
     def summ(df: DataFrame, tag: String): DataFrame =
       df.groupBy(col("seg"))
         .agg(count(lit(1)).as("n"), sum(col("bal")).as("bal_sum"))
         .select(lit(tag).as("state"), col("seg"), col("n"), col("bal_sum"))
-    val chg = cat
-      .changesBetween("ods", "hist", hist.head, Some(hist.last))
+    val chg = second.exceptAll(first).withColumn("__op", lit("insert"))
+      .unionByName(first.exceptAll(second).withColumn("__op", lit("delete")))
       .groupBy(col("__op"))
       .agg(count(lit(1)).as("n"), sum(col("bal")).as("bal_sum"))
       .select(concat(lit("chg_"), col("__op")).as("state"),
         lit("__all__").as("seg"), col("n"), col("bal_sum"))
-    summ(cat.readVersion("ods", "hist", hist.head), "v_first")
-      .unionByName(summ(cat.readVersion("ods", "hist", hist.last), "v_second"))
-      .unionByName(summ(cat.read("ods", "hist"), "live"))
+    summ(first, "v_first")
+      .unionByName(summ(second, "v_second"))
+      .unionByName(summ(cat.table("ods", "hist"), "live"))
       .unionByName(chg)
   }
 
@@ -228,24 +236,36 @@ object CatalogQueries {
        |FROM lineitem GROUP BY l_orderkey % 4""".stripMargin
 
   /** q174 — incremental materialized-aggregate maintenance
-    * ([[graft.runtime.Catalog.refreshAggregate]]): per-customer order
-    * totals built from THREE delta batches folded into the stored
-    * aggregate, never rescanning history; the final table must equal
-    * DuckDB's one-shot GROUP BY over all orders. The core IVM claim —
-    * incremental == full recompute — as a driver-checked hash.
+    * ([[graft.runtime.GraftMaterializedViews]]): per-customer order
+    * totals as a `CREATE MATERIALIZED VIEW` over the first of THREE
+    * order batches, then `CALL system.refresh_materialized_view` after
+    * each later batch folds only that batch's change feed into the
+    * stored aggregate, never rescanning history; the final view must
+    * equal DuckDB's one-shot GROUP BY over all orders. The core IVM
+    * claim — incremental == full recompute — as a driver-checked hash.
     */
   def q174IvmAggregate(spark: SparkSession, dir: String): DataFrame = {
-    val cat = Catalog(spark, scratch("graft-q174"))
-    val orders = Tables.load(spark, dir, "orders")
+    val cat = sqlCatalog(spark, "g174")
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("g174_orders")
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE NAMESPACE $cat.mart")
+    spark.sql(s"CREATE TABLE $cat.ods.ord (cust BIGINT, cents BIGINT)")
     (0 until 3).foreach { i =>
-      val delta = orders.filter(col("o_orderkey") % 3 === i)
-        .select(col("o_custkey").as("cust"),
-          expr("cast(round(o_totalprice * 100) as long)").as("cents"),
-          lit(1L).as("cnt"))
-      cat.refreshAggregate(delta, "mart", "cust_totals",
-        keys = Seq("cust"), measures = Seq("cents", "cnt"))
+      spark.sql(s"""INSERT INTO $cat.ods.ord
+        SELECT o_custkey, CAST(round(o_totalprice * 100) AS BIGINT)
+        FROM g174_orders WHERE o_orderkey % 3 = $i""")
+      if (i == 0)
+        spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.cust_totals AS " +
+          "SELECT cust, sum(cents) AS cents, count(*) AS cnt " +
+          s"FROM $cat.ods.ord GROUP BY cust")
+      else {
+        val res = spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
+          "table => 'mart.cust_totals')").head
+        require(res.getLong(0) > 0, s"q174: refresh $i folded nothing")
+      }
     }
-    cat.read("mart", "cust_totals")
+    spark.table(s"$cat.mart.cust_totals")
+      .select(col("cust"), col("cents"), col("cnt"))
   }
 
   val q174Oracle: String =
@@ -255,29 +275,42 @@ object CatalogQueries {
        |FROM orders GROUP BY o_custkey""".stripMargin
 
   /** q175 — incremental materialized JOIN-view maintenance
-    * ([[graft.runtime.Catalog.refreshJoin]], the append-only IVM delta
-    * rule ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB): the customer⋈orders view is built
-    * from a bootstrap batch, a left-only delta, and a right-only
-    * delta; the final view must equal the one-shot join. Every delta
-    * term and the double-count guard are on the hash path.
+    * ([[graft.runtime.GraftMaterializedViews]]' two-sided counting-IVM
+    * fold ΔF⋈D_new + F_new⋈ΔD − ΔF⋈ΔD): a customer⋈orders segment
+    * view is created over a bootstrap batch of each side, then
+    * refreshed after a customer-only delta and after an orders-only
+    * delta; the final view must equal the one-shot join. Both one-sided
+    * delta terms and the position bookkeeping are on the hash path.
     */
   def q175IvmJoin(spark: SparkSession, dir: String): DataFrame = {
-    val cat = Catalog(spark, scratch("graft-q175"))
-    val c = Tables.load(spark, dir, "customer")
-      .select(col("c_custkey").as("ck"), col("c_mktsegment").as("seg"))
-    val o = Tables.load(spark, dir, "orders")
-      .select(col("o_custkey").as("ck"), col("o_orderkey").as("ok"),
-        expr("cast(round(o_totalprice * 100) as long)").as("cents"))
-    cat.refreshJoin(Some(c.filter(col("ck") % 2 === 0)),
-      Some(o.filter(col("ok") % 2 === 0)),
-      "mart", "cust_orders", "cust", "ord", Seq("ck"))
-    cat.refreshJoin(Some(c.filter(col("ck") % 2 === 1)), None,
-      "mart", "cust_orders", "cust", "ord", Seq("ck"))
-    cat.refreshJoin(None, Some(o.filter(col("ok") % 2 === 1)),
-      "mart", "cust_orders", "cust", "ord", Seq("ck"))
-    cat.read("mart", "cust_orders")
-      .groupBy(col("seg"))
-      .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("cents_sum"))
+    val cat = sqlCatalog(spark, "g175")
+    Tables.load(spark, dir, "customer").createOrReplaceTempView("g175_c")
+    Tables.load(spark, dir, "orders").createOrReplaceTempView("g175_o")
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE NAMESPACE $cat.mart")
+    spark.sql(s"CREATE TABLE $cat.ods.cust (ck BIGINT, seg STRING)")
+    spark.sql(s"CREATE TABLE $cat.ods.ord (ck BIGINT, ok BIGINT, " +
+      "cents BIGINT)")
+    def custs(parity: Int): Unit = spark.sql(s"""INSERT INTO $cat.ods.cust
+      SELECT c_custkey, c_mktsegment FROM g175_c
+      WHERE c_custkey % 2 = $parity""")
+    def orders(parity: Int): Unit = spark.sql(s"""INSERT INTO $cat.ods.ord
+      SELECT o_custkey, o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT)
+      FROM g175_o WHERE o_orderkey % 2 = $parity""")
+    def refresh(step: String): Unit = {
+      val res = spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
+        "table => 'mart.cust_orders')").head
+      require(res.getLong(0) > 0, s"q175: the $step refresh folded nothing")
+    }
+    custs(0); orders(0)
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.cust_orders AS " +
+      "SELECT c.seg, count(*) AS n_orders, sum(o.cents) AS cents_sum " +
+      s"FROM $cat.ods.ord o JOIN $cat.ods.cust c ON o.ck = c.ck " +
+      "GROUP BY c.seg")
+    custs(1); refresh("customer-delta")
+    orders(1); refresh("orders-delta")
+    spark.table(s"$cat.mart.cust_orders")
+      .select(col("seg"), col("n_orders"), col("cents_sum"))
   }
 
   val q175Oracle: String =
@@ -392,7 +425,6 @@ object CatalogQueries {
     * a reused name would pin the first invocation's scratch dir.
     */
   private def sqlCatalog(spark: SparkSession, prefix: String,
-                         versions: Int = 0,
                          autoAnalyze: Boolean = false): String = {
     val dir = scratch(prefix)
     val name = prefix + java.lang.Long.toHexString(
@@ -401,8 +433,6 @@ object CatalogQueries {
         .foldLeft(0L)((a, b) => (a << 8) | (b & 0xff)))
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.root", dir)
-    if (versions > 0)
-      spark.conf.set(s"spark.sql.catalog.$name.versions", versions.toString)
     if (autoAnalyze)
       spark.conf.set(s"spark.sql.catalog.$name.auto_analyze", "true")
     name
@@ -510,18 +540,18 @@ object CatalogQueries {
       |SELECT k, bal_cents, seg FROM merged
       |WHERE NOT (seg = 'NEW' AND k % 2 = 0)""".stripMargin
 
-  /** q184 — time travel as SQL TEXT: `VERSION AS OF` resolving through
-    * the session catalog's `loadTable(ident, version)` onto the
-    * engine's version store — the SQL twin of q172's object-API
-    * `readVersion` (and of the reference's Iceberg snapshot reads).
-    * Three full-replace states land through INSERT OVERWRITE with
-    * version retention on (`spark.sql.catalog.<name>.versions`); the
-    * result unions per-segment summaries of version 1, version 2, and
-    * the live table, so the snapshot numbering, the archived bytes,
-    * and the live read all sit on the oracle hash.
+  /** q184 — time travel as SQL TEXT: `VERSION AS OF 'c<id>'`
+    * resolving through the session catalog's `loadTable(ident,
+    * version)` onto the commit journal — the SQL twin of q172 (and of
+    * the reference's Iceberg snapshot reads). Three full-replace states
+    * land through INSERT INTO + two INSERT OVERWRITEs, one journaled
+    * commit each; the result unions per-segment summaries of the first
+    * two commits' snapshots (ids from `<t>.commits`) and the live
+    * table, so the commit numbering, the tombstoned bytes, and the
+    * live read all sit on the oracle hash.
     */
   def q184SqlTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val cat = sqlCatalog(spark, "g184", versions = 4)
+    val cat = sqlCatalog(spark, "g184")
     Tables.load(spark, dir, "customer").createOrReplaceTempView("g184_customer")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.hist (k BIGINT, bal BIGINT, seg STRING)")
@@ -542,12 +572,15 @@ object CatalogQueries {
           ELSE CAST(round(c_acctbal * 100) AS BIGINT) END,
         c_mktsegment
       FROM g184_customer WHERE c_custkey % 5 <> 0""")
+    val ids = spark.table(s"$cat.ods.hist.commits").orderBy("commit_id")
+      .collect().map(_.getLong(0)).toSeq
+    require(ids.length == 3, s"q184: expected three commits, got $ids")
     spark.sql(s"""
       SELECT 'v_first' AS state, seg, count(*) AS n, sum(bal) AS bal_sum
-      FROM $cat.ods.hist VERSION AS OF 1 GROUP BY seg
+      FROM $cat.ods.hist VERSION AS OF 'c${ids(0)}' GROUP BY seg
       UNION ALL
       SELECT 'v_second', seg, count(*), sum(bal)
-      FROM $cat.ods.hist VERSION AS OF 2 GROUP BY seg
+      FROM $cat.ods.hist VERSION AS OF 'c${ids(1)}' GROUP BY seg
       UNION ALL
       SELECT 'live', seg, count(*), sum(bal)
       FROM $cat.ods.hist GROUP BY seg""")
@@ -1379,22 +1412,21 @@ object CatalogQueries {
        |WHERE l_orderkey >= 10000 AND l_orderkey < 30000
        |GROUP BY l_orderkey % 5""".stripMargin
 
-  /** q206 — SQL-addressable time travel ([[graft.runtime.Catalog
-    * .restoreVersionByName]] via `CALL system.rollback`): a corrupting
-    * full overwrite lands on the versioned table (archiving the good
-    * state as v1), the operator inspects `CALL system.history`, rolls
-    * back from SQL, and `CALL system.remove_orphans` sweeps write
-    * residue — the Iceberg `rollback_to_snapshot` +
-    * `remove_orphan_files` maintenance pair. The emitted aggregate pins
-    * on the driver's hash that the rollback restored EXACTLY the
-    * pre-corruption rows (a no-op rollback leaves the poisoned
-    * quantities and breaks the hash) and that the orphan sweep touched
-    * no live data. GraftProceduresSpec pins the archive-on-rollback
-    * (history grows, VERSION AS OF still reads the bad state) and
-    * grace-period contracts.
+  /** q206 — SQL-addressable rollback ([[graft.sources.GraftCommits
+    * .rollbackToCommit]] via `CALL system.rollback_to_commit`): a
+    * corrupting full overwrite lands on the table (its good state
+    * tombstoned, still addressable in the journal), the operator finds
+    * the last good commit in `<t>.commits`, rolls back from SQL, and
+    * `CALL system.remove_orphans` sweeps write residue — the Iceberg
+    * `rollback_to_snapshot` + `remove_orphan_files` maintenance pair.
+    * The emitted aggregate pins on the driver's hash that the rollback
+    * restored EXACTLY the pre-corruption rows (a no-op rollback leaves
+    * the poisoned quantities and breaks the hash) and that the orphan
+    * sweep touched no live data. GraftCommitsSpec pins the rollback's
+    * journal contracts, GraftProceduresSpec the grace period.
     */
   def q206RollbackMaintenance(spark: SparkSession, dir: String): DataFrame = {
-    val cat = sqlCatalog(spark, "g206", versions = 3)
+    val cat = sqlCatalog(spark, "g206")
     Tables.load(spark, dir, "lineitem").createOrReplaceTempView("g206_l")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.items " +
@@ -1402,14 +1434,16 @@ object CatalogQueries {
     spark.sql(s"""INSERT INTO $cat.ods.items
       SELECT l_orderkey, CAST(l_quantity AS BIGINT), l_returnflag
       FROM g206_l""")
-    // the corrupting overwrite: every quantity poisoned; the versioned
-    // truncate archives the good state as v1 instead of destroying it
+    // the corrupting overwrite: every quantity poisoned; the truncate
+    // tombstones the good state instead of destroying it
     spark.sql(s"""INSERT OVERWRITE $cat.ods.items
       SELECT l_orderkey, CAST(-1 AS BIGINT), l_returnflag FROM g206_l""")
-    val hist = spark.sql(s"CALL $cat.system.history('ods.items')")
-      .collect().map(_.getInt(0)).toSeq
-    require(hist == Seq(1), s"expected one archived version, got $hist")
-    spark.sql(s"CALL $cat.system.rollback('ods.items', version => 1)")
+    val commits = spark.table(s"$cat.ods.items.commits").orderBy("commit_id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    require(commits.map(_._2) == Seq("append", "replace"),
+      s"expected an append then a replace commit, got $commits")
+    spark.sql(s"CALL $cat.system.rollback_to_commit('ods.items', " +
+      s"commit => ${commits.head._1})")
       .collect() // eager: the restore must land before the read below
     spark.sql(s"CALL $cat.system.remove_orphans('ods.items', " +
       "older_than_ms => 0)").collect()
@@ -2121,18 +2155,18 @@ object CatalogQueries {
        |  CAST(NULL AS BIGINT), CAST(NULL AS BIGINT) FROM e2""".stripMargin
 
   /** q220 — METADATA TABLES ([[graft.sources.GraftMetaTables]]:
-    * Iceberg's `db.table.files` / `db.table.history` inspection
+    * Iceberg's `db.table.files` / `db.table.snapshots` inspection
     * surface as nested identifiers): a partitioned table takes a full
-    * load then an INSERT OVERWRITE under version retention;
-    * `<t>.files` then answers per-partition row counts from the stats
-    * manifest as a `LocalTableScan` (REQUIRED in-plan: zero tasks,
-    * zero file opens — the same listing every scan already pays) and
-    * `<t>.history` pins the retained-version count. The hash holds the
-    * post-overwrite state, so a stale manifest row, a missed
-    * partition, or a lost version breaks it.
+    * load then an INSERT OVERWRITE; `<t>.files` then answers
+    * per-partition row counts from the stats manifest as a
+    * `LocalTableScan` (REQUIRED in-plan: zero tasks, zero file opens —
+    * the same listing every scan already pays) and `<t>.commits` pins
+    * the journal's commit count. The hash holds the post-overwrite
+    * state, so a stale manifest row, a missed partition, or a lost
+    * commit breaks it.
     */
   def q220MetaTables(spark: SparkSession, dir: String): DataFrame = {
-    val cat = sqlCatalog(spark, "g220", versions = 3, autoAnalyze = true)
+    val cat = sqlCatalog(spark, "g220", autoAnalyze = true)
     Tables.load(spark, dir, "customer").createOrReplaceTempView("g220_customer")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.cust (k BIGINT, bal BIGINT, " +
@@ -2155,14 +2189,14 @@ object CatalogQueries {
     val perPart = files
       .groupBy(regexp_replace(col("partition"), "^seg=", "").as("grp"))
       .agg(sum(col("records")).as("n"))
-    val hist = spark.table(s"$cat.ods.cust.history")
+    val hist = spark.table(s"$cat.ods.cust.commits")
       .agg(count(lit(1)).as("n")).select(lit("__history__").as("grp"),
         col("n"))
     perPart.unionAll(hist)
   }
 
-  /** Post-overwrite per-partition counts + the retained-version count
-    * (one archived full replace + the live state).
+  /** Post-overwrite per-partition counts + the commit count (the
+    * load's append + the overwrite's replace).
     */
   val q220Oracle: String =
     s"""SELECT c_mktsegment AS grp, ${bi("count(*)")} AS n

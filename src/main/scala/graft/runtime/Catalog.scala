@@ -15,26 +15,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `process_covid_ods.py:79-91` / `process_covid_dds.py:81-93` /
   *    `process_covid_data_mart.py:123-126`;
   *  - `createOrReplace` = full overwrite (`process_covid_dds.py:41-44`);
-  *  - `append` = partitioned append (`process_covid_raw.py:102-113`);
-  *  - `versions > 0` retains each full-replace's previous state as an
-  *    Iceberg-snapshot-style version (the crash-safety protocol
-  *    already produces it as a complete directory — versioning keeps
-  *    it instead of deleting): `history` / `readVersion` (time
-  *    travel) / `restoreVersion` (rollback-as-a-version), pruned to
-  *    the newest `versions`. Applies to the safeSwapWrite paths
-  *    (createOrReplace, writeClustered, compact, unpartitioned
-  *    merge); partitioned overwrites stay partition-scoped.
+  *  - `append` = partitioned append (`process_covid_raw.py:102-113`).
+  *
+  * Table history is the commit journal ([[graft.sources.GraftCommits]]):
+  * the name-addressed writes below (`appendByName`,
+  * `overwritePartitionsByName`, `createOrReplaceByName`, the `*ByName`
+  * maintenance ops) commit through the session catalog's hive-layout
+  * writes and journal every commit, so `VERSION AS OF 'c<id>'`,
+  * `TIMESTAMP AS OF`, `<t>.commits` and `CALL system.rollback_to_commit`
+  * see one history. The path-addressed swaps here (`createOrReplace`,
+  * `compact`, `writeClustered`, unpartitioned `merge`) replace the
+  * whole directory, journal included, and so restart it.
   *
   * Scale note: every write is a straight distributed parquet write — no
   * driver-side collection; partition columns become hive directories so
   * reads get partition pruning for free.
   */
 final case class Catalog(spark: SparkSession, root: String,
-                         format: String = "parquet",
-                         versions: Int = 0) {
+                         format: String = "parquet") {
   require(Catalog.Formats.contains(format),
     s"unsupported storage format '$format' (one of ${Catalog.Formats.mkString(", ")})")
-  require(versions >= 0, "versions must be >= 0 (0 = versioning off)")
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
 
@@ -83,11 +83,10 @@ final case class Catalog(spark: SparkSession, root: String,
   // resolve `<catalog>.<layer>.<table>` identifiers through Spark's
   // catalog manager. Reads keep every DSv2 scan tier (pushdown, static
   // + runtime partition pruning via the catalog's
-  // SupportsRuntimeV2Filtering wrapper); writes resolve to the SAME
-  // crash-safe engine protocols (the catalog's V1Write delegates back
-  // here; dynamic partition overwrite is the catalog's staged-invisible
-  // hive-layout v2 write) — one warehouse, two addressing modes, one
-  // publish-safety story.
+  // SupportsRuntimeV2Filtering wrapper); writes resolve to the
+  // catalog's staged-invisible hive-layout v2 writes (append, dynamic
+  // partition overwrite, truncate-replace), each one journaled commit —
+  // one warehouse, two addressing modes, one publish-safety story.
 
   /** Session-catalog name bound to this root: `graft` when free (or
     * already bound to this root+format), otherwise a deterministic
@@ -109,15 +108,13 @@ final case class Catalog(spark: SparkSession, root: String,
           spark.conf.set(implKey, "graft.sources.GraftCatalog")
           spark.conf.set(rootKey, root)
           spark.conf.set(s"spark.sql.catalog.$name.format", format)
-          if (versions > 0)
-            spark.conf.set(s"spark.sql.catalog.$name.versions", versions.toString)
           true
       }
     }
     if (tryBind("graft")) "graft"
     else {
       val suffix = java.lang.Long.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(s"$root|$format|$versions")
+        scala.util.hashing.MurmurHash3.stringHash(s"$root|$format")
           .toLong & 0xffffffffL)
       val unique = s"graft_$suffix"
       require(tryBind(unique),
@@ -137,17 +134,15 @@ final case class Catalog(spark: SparkSession, root: String,
   def table(layer: String, table: String): DataFrame =
     spark.table(sqlIdent(layer, table))
 
-  /** Name-based partitioned append (S5 by name): clusters within write
-    * partitions like [[append]], then routes through the session
-    * catalog — CTAS on first write (which persists the schema + spec in
-    * the table sidecar), by-name-resolved append after.
+  /** Name-based partitioned append (S5 by name): routes through the
+    * session catalog — CTAS on first write (which persists the schema +
+    * spec in the table sidecar), by-name-resolved append after. The
+    * catalog's hive-layout append clusters and orders rows by the
+    * partition columns itself.
     */
   def appendByName(df: DataFrame, layer: String, table: String,
-                   partitionCols: Seq[String], sortCols: Seq[String] = Nil): Unit = {
-    val clustered =
-      if (sortCols.nonEmpty) df.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      else df
-    val w = clustered.writeTo(sqlIdent(layer, table))
+                   partitionCols: Seq[String]): Unit = {
+    val w = df.writeTo(sqlIdent(layer, table))
     if (tableExists(layer, table)) w.append()
     else {
       ensureNamespace(layer)
@@ -177,9 +172,9 @@ final case class Catalog(spark: SparkSession, root: String,
   }
 
   /** Name-based full replace (S7 by name): `overwrite(true)` resolves
-    * to the catalog's truncate write, which IS [[createOrReplace]]'s
-    * crash-safe swap (not a drop+recreate RTAS — the table identity and
-    * version history survive).
+    * to the catalog's staged-invisible truncate-replace write (not a
+    * drop+recreate RTAS — the table identity and its commit journal
+    * survive; the replace is one more `replace` commit).
     */
   def createOrReplaceByName(df: DataFrame, layer: String, table: String,
                             partitionCols: Seq[String] = Nil): Unit = {
@@ -223,7 +218,7 @@ final case class Catalog(spark: SparkSession, root: String,
       else guarded
     val base = new org.apache.hadoop.fs.Path(path(layer, table))
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // commit journal (graft.sources.GraftCommits): the V1 append does
+    // commit journal (graft.sources.GraftCommits): this append does
     // not know its final file names — claim them as the visible delta
     // across the save. The pre-listing costs what the save's own
     // committer already pays; the record write is one tiny file under
@@ -454,107 +449,6 @@ final case class Catalog(spark: SparkSession, root: String,
         .save(tmp)
     }
 
-  /** Incremental materialized-aggregate maintenance: fold a DELTA of
-    * rows into a stored keyed aggregate without rescanning history.
-    * The delta is partially aggregated, unioned with the STORED
-    * aggregate (group-cardinality-sized, not history-sized), and
-    * re-aggregated — sound for additive measures (count/sum; an avg is
-    * maintained as its (sum, count) partials), which is exactly the
-    * algebra Spark's own partial aggregation relies on. The swap runs
-    * through [[createOrReplace]], so the refresh is crash-safe and
-    * every refresh is a snapshot version — a double-applied delta is
-    * repaired by `restoreVersion`, the same recovery story as the CDC
-    * sink. At 100 TB: cost per refresh = delta scan + aggregate-table
-    * scan; the raw history is never touched.
-    *
-    * `measures` are columns of `delta` to be sum-maintained (pass a
-    * `lit(1)` column for a count).
-    */
-  def refreshAggregate(delta: DataFrame, layer: String, table: String,
-                       keys: Seq[String], measures: Seq[String]): Unit = {
-    require(keys.nonEmpty, "refreshAggregate needs at least one key column")
-    require(measures.nonEmpty, "refreshAggregate needs at least one measure")
-    import org.apache.spark.sql.functions.{col, sum}
-    def rollup(df: DataFrame): DataFrame =
-      df.groupBy(keys.map(col): _*)
-        .agg(sum(col(measures.head)).as(measures.head),
-          measures.tail.map(m => sum(col(m)).as(m)): _*)
-        .select((keys ++ measures).map(col): _*)
-    val partial = rollup(delta)
-    val merged =
-      if (tableExists(layer, table))
-        rollup(read(layer, table).select((keys ++ measures).map(col): _*)
-          .unionByName(partial))
-      else partial
-    createOrReplace(merged, layer, table)
-  }
-
-  /** Incremental materialized JOIN-view maintenance, append-only: keep
-    * `view` = left ⨝ right (inner equi-join on `joinKeys`) current
-    * under appends WITHOUT recomputing the join, via the classic IVM
-    * delta rule
-    *
-    *   Δ(A ⨝ B) = ΔA ⨝ B_old  ∪  A_old ⨝ ΔB  ∪  ΔA ⨝ ΔB
-    *
-    * appended to the stored view while the base tables absorb their
-    * deltas. Per-refresh cost is DELTA-proportional — every term joins
-    * a delta against a base or another delta; the full A ⨝ B is never
-    * re-touched, which at 100 TB is the difference between a minutes
-    * refresh and an hours one. Retractions (updates/deletes) need
-    * counting-IVM and are out of scope — append-only is the lakehouse
-    * fact-stream case (and what `append` itself supports).
-    *
-    * The delta terms are materialized BEFORE the bases absorb their
-    * deltas: parquet directory reads are lazy, so joining against
-    * `read(base)` after appending would silently see the delta twice.
-    * Non-key columns of the two sides must not collide (the join
-    * output carries both).
-    *
-    * Crash window: view append and base appends are separate commits —
-    * a crash between them leaves the view one delta AHEAD of its
-    * bases. Re-running the same delta heals the bases but double-joins
-    * the view rows; callers needing exactly-once across a crash should
-    * version the view (`versions > 0`) and roll back before retrying,
-    * the same recovery contract as refreshAggregate.
-    */
-  def refreshJoin(deltaLeft: Option[DataFrame], deltaRight: Option[DataFrame],
-                  layer: String, view: String,
-                  leftTable: String, rightTable: String,
-                  joinKeys: Seq[String]): Unit = {
-    require(joinKeys.nonEmpty, "refreshJoin needs at least one join key")
-    require(deltaLeft.nonEmpty || deltaRight.nonEmpty,
-      "refreshJoin needs at least one delta")
-    val hasL = tableExists(layer, leftTable)
-    val hasR = tableExists(layer, rightTable)
-    require((hasL || deltaLeft.nonEmpty) && (hasR || deltaRight.nonEmpty),
-      "first refresh must supply the bootstrap delta for each side")
-    val dl = deltaLeft.map(Materialize.once)  // used in up to two terms
-    val dr = deltaRight.map(Materialize.once)
-    val aOld = if (hasL) Some(read(layer, leftTable)) else None
-    val bOld = if (hasR) Some(read(layer, rightTable)) else None
-    val viewExists = tableExists(layer, view)
-    val terms = Seq(
-      // first refresh over pre-existing bases = initial materialization
-      if (!viewExists) for (a <- aOld; b <- bOld) yield a.join(b, joinKeys)
-      else None,
-      for (d <- dl; b <- bOld) yield d.join(b, joinKeys),
-      for (a <- aOld; d <- dr) yield a.join(d, joinKeys),
-      for (d1 <- dl; d2 <- dr) yield d1.join(d2, joinKeys)).flatten
-    val newRows = terms
-      .reduceOption(_ unionByName _)
-      // pin the delta rows NOW — the base reads below must not observe
-      // the appends that follow
-      .map(Materialize.once)
-    newRows.foreach { rows =>
-      if (viewExists) append(rows, layer, view, Nil)
-      else createOrReplace(rows, layer, view)
-    }
-    dl.foreach(d => if (hasL) append(d, layer, leftTable, Nil)
-                    else createOrReplace(d, layer, leftTable))
-    dr.foreach(d => if (hasR) append(d, layer, rightTable, Nil)
-                    else createOrReplace(d, layer, rightTable))
-  }
-
   /** Bucketed external table at this catalog's path: rows are hashed
     * into `buckets` files per partition by `bucketCols` and sorted
     * within each bucket. Two tables bucketed the SAME way on the join
@@ -685,8 +579,8 @@ final case class Catalog(spark: SparkSession, root: String,
     * [[graft.sources.GraftPartitionedCow.TruncateReplaceWrite]]
     * (replacement rows re-clustered by the partition+bucket transforms
     * → ~one tagged file per (partition, bucket); staged-invisible,
-    * old generation retired — or version-archived — in the driver
-    * commit), plain tables the V1 versioned swap-replace.
+    * old generation retired in the driver commit), plain tables the
+    * same write without bucket tags.
     *
     * Streaming appends (one file per epoch per bucket) are the
     * motivating accretion: N epochs × n buckets collapse to ~n files
@@ -724,8 +618,7 @@ final case class Catalog(spark: SparkSession, root: String,
     * and a full scan. File sizing reuses [[compact]]'s
     * bytes/targetFileBytes heuristic. Plain (non-hive-partitioned,
     * non-bucketed) tables only: those layouts impose their own write
-    * clustering, which would override this one — their per-partition
-    * ordering lever is [[appendByName]]'s sortCols. Pair with
+    * clustering, which would override this one. Pair with
     * [[analyze]] (or let `CALL system.cluster` do both). Returns the
     * task (≈ file) count of the rewrite.
     *
@@ -756,8 +649,7 @@ final case class Catalog(spark: SparkSession, root: String,
     require(transforms.isEmpty,
       s"$layer.$table declares ${transforms.mkString(", ")}: partitioned/" +
         "bucketed layouts own their write clustering; range-cluster " +
-        "applies to plain tables (per-partition ordering is appendByName's " +
-        "sortCols)")
+        "applies to plain tables")
     val hp = new org.apache.hadoop.fs.Path(path(layer, table))
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hp).getLength
@@ -887,10 +779,9 @@ final case class Catalog(spark: SparkSession, root: String,
     *
     * Never touched: visible data files, `_graft_meta` / `_graft_stats`
     * sidecars, `_graft_stream_commits` (epoch markers and crash-retry
-    * manifests ARE the exactly-once state), and the `.__versions` /
-    * `.__swap*` SIBLING directories (time-travel store and swap-crash
-    * recovery state live outside the table dir and are managed by
-    * their own protocols). The grace period is the correctness lever:
+    * manifests ARE the exactly-once state), and the `.__swap*` SIBLING
+    * directories (swap-crash recovery state lives outside the table
+    * dir and is managed by its own protocol). The grace period is the correctness lever:
     * an in-flight job's stage is younger than any sane grace, so
     * cleanup can run concurrently with writers.
     *
@@ -1003,10 +894,6 @@ final case class Catalog(spark: SparkSession, root: String,
         fs.mkdirs(hp.getParent)
         require(fs.rename(old, hp),
           s"swap recovery: could not restore $hp from $old")
-      } else if (fs.exists(old) && versions > 0) {
-        // a crash fell between the swap and the archive below — the
-        // orphan IS a complete previous version: finish archiving it
-        archiveVersion(fs, layer, table, old)
       }
       fs.delete(tmp, true)
       fs.delete(old, true)
@@ -1032,132 +919,13 @@ final case class Catalog(spark: SparkSession, root: String,
       }
       swapDirIn(fs, newDir = tmp, live = hp, aside = old)
     }
-    // snapshot retention (the Iceberg-snapshot semantic the reference
-    // relies on): the crash-safety protocol already produced the
-    // previous version as a complete directory — RETAIN it as
-    // v<N> instead of deleting, pruned to the newest `versions`
-    if (fs.exists(old)) {
-      if (versions > 0) archiveVersion(fs, layer, table, old)
-      else
-        // reader snapshot isolation (r12 item 2): the swapped-aside
-        // generation is TOMBSTONED, not deleted — an in-flight reader
-        // that planned before this swap re-points its vanished splits
-        // at the tombstone ([[graft.sources.GraftRetired]]); GC via
-        // remove_orphans
-        graft.sources.GraftRetired.retireRoot(fs, hp, old)
-    }
+    // reader snapshot isolation (r12 item 2): the swapped-aside
+    // generation is TOMBSTONED, not deleted — an in-flight reader that
+    // planned before this swap re-points its vanished splits at the
+    // tombstone ([[graft.sources.GraftRetired]]); GC via remove_orphans
+    if (fs.exists(old)) graft.sources.GraftRetired.retireRoot(fs, hp, old)
     // maintenance policy outside the lock (retired.expire_ms GC)
     graft.sources.GraftMaintenance.afterCommit(spark, fs, hp)
-  }
-
-  private def versionsDir(layer: String, table: String) =
-    new org.apache.hadoop.fs.Path(s"${path(layer, table)}.__versions")
-
-  /** Move a complete previous table copy into the version store as
-    * the next v<N> and prune beyond the retention window.
-    */
-  private def archiveVersion(fs: org.apache.hadoop.fs.FileSystem,
-                             layer: String, table: String,
-                             from: org.apache.hadoop.fs.Path): Unit = {
-    val dir = versionsDir(layer, table)
-    fs.mkdirs(dir)
-    val next = history(layer, table).lastOption.getOrElse(0) + 1
-    require(fs.rename(from, new org.apache.hadoop.fs.Path(dir, f"v$next%06d")),
-      s"version archive: could not retain $from as v$next")
-    history(layer, table).dropRight(versions).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, f"v$v%06d"), true)
-    }
-  }
-
-  /** Retained version numbers for a versioned table, oldest first.
-    * Version N is the table as it was BEFORE the (N+1)-th retained
-    * replace — Iceberg-snapshot-style history without a metastore.
-    */
-  def history(layer: String, table: String): Seq[Int] = {
-    val dir = versionsDir(layer, table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.matches("v\\d{6}")).map(_.drop(1).toInt).sorted
-  }
-
-  /** Expire retained time-travel versions beyond the newest `keep` —
-    * Iceberg's `expire_snapshots` for the directory version store.
-    * Storage-only maintenance: the LIVE table is untouched, and the
-    * write-time retention window (`versions`) keeps pruning on its
-    * own; this is the manual lever for reclaiming an over-retained
-    * store (e.g. after lowering the retention policy). Returns
-    * (versions expired, bytes reclaimed). A concurrent `VERSION AS
-    * OF` of an expired version fails on its next file read — the
-    * same contract as Iceberg expiring a snapshot a reader holds.
-    */
-  def expireVersionsByName(layer: String, table: String,
-      keep: Int): (Int, Long) = {
-    require(keep >= 0, s"keep must be >= 0, got $keep")
-    val dir = versionsDir(layer, table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gone = history(layer, table).dropRight(keep)
-    var bytes = 0L
-    gone.foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(dir, f"v$v%06d")
-      bytes += fs.getContentSummary(p).getLength
-      fs.delete(p, true)
-    }
-    (gone.size, bytes)
-  }
-
-  /** Time-travel read of a retained version. */
-  def readVersion(layer: String, table: String, version: Int): DataFrame = {
-    require(history(layer, table).contains(version),
-      s"$layer.$table has no retained version $version " +
-        s"(history: ${history(layer, table).mkString(", ")})")
-    val vDir = new org.apache.hadoop.fs.Path(
-      versionsDir(layer, table), f"v$version%06d")
-    val df = spark.read.format(format).options(readOptions)
-      .load(vDir.toString)
-    // archived generations carry their deletion-vector and
-    // equality-delete sidecars
-    graft.sources.GraftEqDel.applyToPathRead(spark,
-      graft.sources.GraftDv.applyToPathRead(spark, df, vDir), vDir)
-  }
-
-  /** Roll the live table back to a retained version. The replaced
-    * current state is itself archived first (rollback is one more
-    * version, never a deletion), so a rollback can be rolled back.
-    */
-  def restoreVersion(layer: String, table: String, version: Int): Unit =
-    createOrReplace(readVersion(layer, table, version), layer, table)
-
-  /** [[restoreVersion]] through the session catalog's OWN write path:
-    * the truncate-replace write re-clusters rows by the table's
-    * declared transforms, so a bucketed/partitioned table keeps its
-    * layout (and its exchange-free joins) across a rollback — the
-    * path-addressed [[restoreVersion]] writes a plain frame and would
-    * drop bucket tags. Same never-a-deletion contract: the catalog
-    * write archives the replaced current state as one more version.
-    */
-  def restoreVersionByName(layer: String, table: String,
-      version: Int): Unit =
-    readVersion(layer, table, version)
-      .writeTo(sqlIdent(layer, table))
-      .overwrite(org.apache.spark.sql.functions.lit(true))
-
-  /** Incremental read between two retained versions (`to` = None
-    * reads the live table): the row-level changes as an `__op`-tagged
-    * frame ("insert" rows appeared, "delete" rows vanished; an update
-    * is a delete+insert pair — exactly the shape
-    * [[graft.streaming.Streaming.mergeSink]]-style appliers consume).
-    * Multiset semantics via exceptAll, so duplicate rows diff by
-    * count. A snapshot diff is inherently a two-table scan + shuffle;
-    * use it at the cadence snapshots are taken, not per query.
-    */
-  def changesBetween(layer: String, table: String, from: Int,
-                     to: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val a = readVersion(layer, table, from)
-    val b = to.map(readVersion(layer, table, _)).getOrElse(read(layer, table))
-    b.exceptAll(a).withColumn("__op", lit("insert"))
-      .unionByName(a.exceptAll(b).withColumn("__op", lit("delete")))
   }
 
   /** Z-order-clustered write: range-partition and sort by the Morton

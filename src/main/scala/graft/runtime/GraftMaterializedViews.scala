@@ -27,8 +27,9 @@ import graft.sources.{GraftCatalog, GraftCommits}
   *    expr>) / COUNT(*) / COUNT(col) / MIN / MAX measures with at
   *    least one COUNT(*) (the group-liveness counter every
   *    counting-IVM scheme needs) — then builds the backing table,
-  *    PARTITIONED BY the directory-renderable group keys so the
-  *    refresh's MERGE rewrites only touched groups' partitions, and
+  *    PARTITIONED BY the directory-renderable, low-cardinality group
+  *    keys so the refresh's MERGE rewrites only touched groups'
+  *    partitions, and
   *    records the definition + each base's commit position + journal
   *    incarnation identity in a `_graft_mv` sidecar that lives in the
   *    sibling `<name>.__mv/` directory (OUTSIDE the backing dir, so a
@@ -601,19 +602,38 @@ object GraftMaterializedViews {
         "or retry")
   }
 
+  /** Most distinct values a backing partition prefix may take: a
+    * directory per group costs one file per touched group per refresh,
+    * so past this the per-file cost outweighs the group scoping.
+    */
+  private val MaxBackingPartitions = 64
+
   /** The backing CTAS's PARTITIONED BY clause: the prefix of group
     * keys whose type renders unambiguously as a directory value
-    * (capped at two levels — the tested leaf-merge depth). A
-    * partitioned backing is what makes the refresh MERGE group-scoped:
-    * the engine's copy-on-write rewrites only the touched partitions
-    * (leaf-narrowed to the touched KEY VALUES), so the write side
-    * costs the CHANGED GROUPS, not the view (r16 verdict item 3).
+    * (capped at two levels — the tested leaf-merge depth), cut where
+    * the view's distinct key tuples exceed [[MaxBackingPartitions]]
+    * (one aggregate over the body). A partitioned backing is what
+    * makes the refresh MERGE group-scoped: the engine's copy-on-write
+    * rewrites only the touched partitions (leaf-narrowed to the touched
+    * KEY VALUES), so the write side costs the CHANGED GROUPS, not the
+    * view (r16 verdict item 3).
     */
-  private def partitionClause(keys: Seq[Key],
+  private def partitionClause(spark: SparkSession, bodySql: String,
+      keys: Seq[Key],
       keyTypes: Seq[org.apache.spark.sql.types.DataType]): String = {
-    val cols = keys.zip(keyTypes).takeWhile { case (_, t) =>
+    val renderable = keys.zip(keyTypes).takeWhile { case (_, t) =>
       graft.sources.GraftPartitionedCow.dirRenderable(t)
     }.take(2).map { case (k, _) => s"`${k.out}`" }
+    val cols =
+      if (renderable.isEmpty) Nil
+      else {
+        val prefixes = renderable.indices.map(i =>
+          expr(s"count(DISTINCT ${renderable.take(i + 1).mkString(", ")})"))
+        val counts = spark.sql(bodySql).agg(prefixes.head, prefixes.tail: _*)
+          .head.toSeq.map(_.asInstanceOf[Long])
+        renderable.zip(counts)
+          .takeWhile(_._2 <= MaxBackingPartitions).map(_._1)
+      }
     if (cols.isEmpty) "" else s"PARTITIONED BY (${cols.mkString(", ")}) "
   }
 
@@ -626,7 +646,7 @@ object GraftMaterializedViews {
     sources.foreach(requireJournalAxis(spark, _,
       "CREATE MATERIALIZED VIEW"))
     val backing = s"`$cat`.`$ns`.`$name`"
-    val parts = partitionClause(ex.keys, ex.keyTypes)
+    val parts = partitionClause(spark, bodySql, ex.keys, ex.keyTypes)
     val poss = buildAtStablePositions(spark, sources, attempt => {
       // a retried build has already created the table: replace it
       val orReplace = if (replace || attempt > 0) "OR REPLACE " else ""
@@ -721,7 +741,7 @@ object GraftMaterializedViews {
       // sidecar has keys, but types live in the plan)
       val ex = extract(spark, spark.sessionState.executePlan(
         spark.sessionState.sqlParser.parsePlan(meta.sql)).analyzed)
-      val parts = partitionClause(ex.keys, ex.keyTypes)
+      val parts = partitionClause(spark, meta.sql, ex.keys, ex.keyTypes)
       val poss = buildAtStablePositions(spark, sources, _ => {
         spark.sql(s"CREATE OR REPLACE TABLE $backing ${parts}AS ${meta.sql}")
         ()
@@ -779,11 +799,12 @@ object GraftMaterializedViews {
         // ONE action materializes both feeds and returns both counts —
         // two separate .count() calls paid a second full per-statement
         // execution (plan + job scheduling) for a number the first
-        // pass already knew (guide §7.3 driver/fixed cost)
-        val counts = dF.select(fcount(lit(1)))
-          .unionAll(dD.select(fcount(lit(1))))
-          .collect().map(_.getLong(0))
-        val (nF, nD) = (counts(0), counts(1))
+        // pass already knew (guide §7.3 driver/fixed cost). Each side
+        // is tagged: union output order is not a contract
+        val counts = dF.select(lit("f").as("side"), fcount(lit(1)))
+          .unionAll(dD.select(lit("d").as("side"), fcount(lit(1))))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        val (nF, nD) = (counts("f"), counts("d"))
         def joined(l: DataFrame, r: DataFrame, signCol: Column)
             : DataFrame = {
           val cond = ds.joinKeys.map { case (fc, dc) =>

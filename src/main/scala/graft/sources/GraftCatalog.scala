@@ -14,9 +14,8 @@ import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsPushDownVariantExtractions, SupportsReportStatistics, SupportsRuntimeV2Filtering, VariantExtraction}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDynamicOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.v2.{FileScan, FileScanBuilder, FileTable}
-import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -53,11 +52,11 @@ import graft.runtime.Catalog
   *  - READS delegate to Spark's own file tables (ParquetTable & co), so
   *    the scans keep every DSv2 tier: filter/column pushdown, partition
   *    pruning, runtime (dynamic) pruning, footer statistics;
-  *  - INSERT INTO / INSERT OVERWRITE build a [[V1Write]] routed through
-  *    [[graft.runtime.Catalog]]'s crash-safe write protocols
-  *    (partitioned append; temp-dir + rename-swap full replace) — the
-  *    same paths the object API uses, so SQL writes inherit the
-  *    publish-safety story instead of reimplementing it;
+  *  - INSERT INTO / INSERT OVERWRITE are v2 hive-layout writes
+  *    ([[GraftPartitionedCow.AppendWrite]] / `TruncateReplaceWrite`):
+  *    tasks stage dot-invisible files, the driver commit publishes them
+  *    by rename and retires the superseded generation under the table
+  *    commit lock, and every commit lands one commit-journal record;
   *  - MERGE / UPDATE / DELETE implement [[SupportsRowLevelOperations]]
   *    as group-based copy-on-write (see [[GraftTable]] docs).
   *
@@ -88,7 +87,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private var catalogName: String = "graft"
   private var root: String = _
   private var format: String = "parquet"
-  private var versions: Int = 0
   private var autoAnalyze: Boolean = false
 
   override def initialize(name: String,
@@ -99,11 +97,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     format = Option(options.get("format")).getOrElse("parquet")
     require(Catalog.Formats.contains(format),
       s"unsupported format '$format' (one of ${Catalog.Formats.mkString(", ")})")
-    // spark.sql.catalog.<name>.versions = N retains each full replace
-    // as an Iceberg-snapshot-style version — the store VERSION AS OF /
-    // TIMESTAMP AS OF resolve against
-    versions = Option(options.get("versions")).map(_.toInt).getOrElse(0)
-    require(versions >= 0, "versions must be >= 0")
     // spark.sql.catalog.<name>.auto_analyze = true refreshes the
     // _graft_stats skipping manifest incrementally after every
     // committed write (only the write's own new files pay a footer
@@ -115,7 +108,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def name(): String = catalogName
 
   private def spark: SparkSession = SparkSession.active
-  private def engine: Catalog = Catalog(spark, root, format, versions)
+  private def engine: Catalog = Catalog(spark, root, format)
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -211,7 +204,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def loadTable(ident: Identifier): Table = {
     // Iceberg-style nested-identifier metadata relations:
-    // `cat.<ns>.<table>.files|history|changes` resolve against the base
+    // `cat.<ns>.<table>.files|commits|changes` resolve against the base
     // table — possible only because graft namespaces are single-level,
     // so a 2-level namespace is unambiguous
     if (ident.namespace.length == 2) {
@@ -227,12 +220,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           new GraftMetaTable(s"$baseName.partitions",
             GraftMetaTables.PartitionsSchema,
             () => GraftMetaTables.partitionsRows(spark, dir))
-        case "history" =>
-          val layer = layerOf(base.namespace)
-          new GraftMetaTable(s"$baseName.history",
-            GraftMetaTables.HistorySchema,
-            () => GraftMetaTables.historyRows(spark, fs, root, layer,
-              base.name, engine.history(layer, base.name)))
         case "changes" =>
           new GraftChangesTable(spark, baseName, dir.toString, format,
             GraftTableMeta.read(fs, dir))
@@ -246,76 +233,51 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val meta = GraftTableMeta.read(fs, tableDir(ident))
     new GraftTable(spark, catalogName, root, format,
-      layerOf(ident.namespace), ident.name, meta, versions,
+      layerOf(ident.namespace), ident.name, meta,
       autoAnalyze = autoAnalyze)
   }
 
-  /** `SELECT ... FROM cat.ns.t VERSION AS OF n` — serves the retained
-    * version directory ([[graft.runtime.Catalog.readVersion]]'s store)
-    * as a read-only snapshot table. Version n is the table as it was
-    * BEFORE the (n+1)-th retained full replace, matching the object
-    * API's `history` numbering exactly.
+  /** `SELECT ... FROM cat.ns.t VERSION AS OF 'c<id>'` — PER-COMMIT
+    * time travel against the commit journal ([[GraftCommits]]): any
+    * batch commit (append, overwrite, replace, rewrite, delete,
+    * mor-delete, rollback) is addressable as a read-only snapshot.
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    // `VERSION AS OF 'c<id>'` — PER-COMMIT time travel against the
-    // commit journal ([[GraftCommits]], r14 item 2): any batch commit
-    // (append, overwrite, rewrite, delete, mor-delete) is addressable,
-    // not only retained full replaces
-    if (version.matches("[cC]\\d+")) {
-      val dir = tableDir(ident)
-      val meta = GraftTableMeta.read(fs, dir)
-      return new GraftCommitSnapshotTable(spark,
-        s"$catalogName.${ident.namespace.mkString(".")}.${ident.name}",
-        dir.toString, format, meta, version.drop(1).toLong)
-    }
-    val v = try version.toInt catch {
-      case _: NumberFormatException => throw new IllegalArgumentException(
-        s"graft versions are integers (history numbering) or 'c<commit>' " +
-          s"(commit-journal snapshots), got '$version'")
-    }
-    val hist = engine.history(layerOf(ident.namespace), ident.name)
-    require(hist.contains(v),
-      s"$ident has no retained version $v (history: ${hist.mkString(", ")})")
-    snapshotTable(ident, v)
+    require(version.matches("[cC]\\d+"),
+      s"graft versions are commit-journal ids 'c<commit_id>' (see " +
+        s"<table>.commits), got '$version'")
+    commitSnapshot(ident, version.drop(1).toLong)
   }
 
-  /** `SELECT ... FROM cat.ns.t TIMESTAMP AS OF ts` — resolves against
-    * each state's PUBLISH time, which the directory store carries for
-    * free: a directory's mtime is when its files were written, and the
-    * archive rename (like the publish swap) preserves it. The state at
-    * ts is therefore the latest state (retained version or the live
-    * table) whose publish mtime is at-or-before ts — Iceberg's
-    * snapshot-as-of rule over a directory store. A ts before the
-    * earliest retained publish is refused (that history is pruned,
-    * same as Iceberg before the first snapshot).
+  /** `SELECT ... FROM cat.ns.t TIMESTAMP AS OF ts` — the state of the
+    * newest journal commit at or before ts (Iceberg's snapshot-as-of
+    * rule over the commit journal); a ts at or after the last commit
+    * is the live table. A ts before the first retained commit is
+    * refused (that history was expired, same as Iceberg before the
+    * first snapshot); so is a commit whose tombstones were GC'd — the
+    * snapshot refuses at planning rather than serve an older state.
     */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val layer = layerOf(ident.namespace)
     val tsMillis = timestamp / 1000L // Spark passes microseconds
-    def publishedAt(p: Path): Long = fs.getFileStatus(p).getModificationTime
-    val states: Seq[(Option[Int], Long)] =
-      engine.history(layer, ident.name).map { v =>
-        (Some(v), publishedAt(new Path(
-          s"$root/$layer/${ident.name}.__versions/" + f"v$v%06d")))
-      } :+ ((None, publishedAt(tableDir(ident))))
-    val atOrBefore = states.filter(_._2 <= tsMillis)
-    require(atOrBefore.nonEmpty,
-      s"$ident: timestamp predates the retained history (earliest " +
-        s"publish ${new java.sql.Timestamp(states.map(_._2).min)})")
-    atOrBefore.maxBy(_._2)._1 match {
-      case Some(v) => snapshotTable(ident, v)
-      case None => loadTable(ident) // live state is the match
+    val recs = GraftCommits.list(fs, tableDir(ident))
+    require(recs.nonEmpty, s"$ident has no commit journal to time-travel")
+    if (tsMillis >= recs.last.ts) loadTable(ident)
+    else {
+      val atOrBefore = recs.filter(_.ts <= tsMillis)
+      require(atOrBefore.nonEmpty,
+        s"$ident: timestamp predates the retained commit journal " +
+          s"(earliest commit ${new java.sql.Timestamp(recs.head.ts)})")
+      commitSnapshot(ident, atOrBefore.last.id)
     }
   }
 
-  private def snapshotTable(ident: Identifier, v: Int): Table = {
-    val layer = layerOf(ident.namespace)
-    new GraftTable(spark, catalogName, root, format, layer,
-      s"${ident.name}@v$v", GraftTableMeta(None, Nil), versions,
-      dataDirOverride =
-        Some(s"$root/$layer/${ident.name}.__versions/" + f"v$v%06d"))
+  private def commitSnapshot(ident: Identifier, commitId: Long): Table = {
+    val dir = tableDir(ident)
+    new GraftCommitSnapshotTable(spark,
+      s"$catalogName.${ident.namespace.mkString(".")}.${ident.name}",
+      dir.toString, format, GraftTableMeta.read(fs, dir), commitId)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -438,7 +400,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = tableDir(ident)
     val meta0 = GraftTableMeta.read(fs, dir)
     val table0 = new GraftTable(spark, catalogName, root, format,
-      layerOf(ident.namespace), ident.name, meta0, versions)
+      layerOf(ident.namespace), ident.name, meta0)
     val base = meta0.schema.getOrElse(table0.schema())
     // evolved spec columns are partition columns for every refusal
     // below: their values are directory names in the new era
@@ -846,7 +808,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def dropTable(ident: Identifier): Boolean =
     tableExists(ident) && {
       val dir = tableDir(ident)
-      // internal siblings (versions, staging) die with the table
+      // internal siblings (lock, tombstones, staging) die with the table
       val siblings = fs.listStatus(dir.getParent)
         .map(_.getPath)
         .filter(_.getName.startsWith(ident.name + ".__"))
@@ -1183,10 +1145,10 @@ private[sources] object GraftTableMeta {
 }
 
 /** One table of the [[GraftCatalog]]: reads delegate to Spark's file
-  * table for the format (full DSv2 pushdown/pruning tiers), DML writes
-  * route through [[graft.runtime.Catalog]]'s crash-safe protocols, and
-  * MERGE/UPDATE/DELETE implement group-based copy-on-write row-level
-  * operations:
+  * table for the format (full DSv2 pushdown/pruning tiers), batch
+  * writes are staged-invisible hive-layout writes journaled as one
+  * commit each, and MERGE/UPDATE/DELETE implement group-based
+  * copy-on-write row-level operations:
   *
   *  - unpartitioned tables: the operation's scan is the table's
   *    ordinary scan (the "group" is the whole table) and the write
@@ -1216,13 +1178,9 @@ private[sources] object GraftTableMeta {
 private[sources] class GraftTable(
     spark: SparkSession, catalogName: String, root: String, format: String,
     layer: String, table: String, meta: GraftTableMeta,
-    versions: Int = 0,
     // catalog option auto_analyze: committed writes refresh the
     // _graft_stats skipping manifest incrementally
-    autoAnalyze: Boolean = false,
-    // time-travel reads serve an archived version directory instead of
-    // the live table dir, and are strictly read-only
-    dataDirOverride: Option[String] = None)
+    autoAnalyze: Boolean = false)
   extends Table with SupportsRead with SupportsWrite
   with SupportsRowLevelOperations with SupportsDeleteV2
   with SupportsPartitionManagement
@@ -1240,10 +1198,7 @@ private[sources] class GraftTable(
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     GraftDeltaMor.metadataColumns(schema())
 
-  private val dir = dataDirOverride.getOrElse(s"$root/$layer/$table")
-  private def readOnly: Boolean = dataDirOverride.isDefined
-
-  private def engine: Catalog = Catalog(spark, root, format, versions)
+  private val dir = s"$root/$layer/$table"
 
   /** Per-format reader options mirroring [[Catalog.readOptions]]; the
     * sidecar schema (when present) replaces csv inference.
@@ -1374,7 +1329,6 @@ private[sources] class GraftTable(
 
   override def createPartition(ident: org.apache.spark.sql.catalyst.InternalRow,
       properties: util.Map[String, String]): Unit = {
-    require(!readOnly, s"${name()} is a time-travel snapshot: read-only")
     require(properties.isEmpty,
       "graft partitions carry no properties (directory store)")
     val p = partitionDirOf(ident)
@@ -1385,26 +1339,25 @@ private[sources] class GraftTable(
   }
 
   override def dropPartition(
-      ident: org.apache.spark.sql.catalyst.InternalRow): Boolean =
-    !readOnly && {
-      val p = partitionDirOf(ident)
-      pmFs.exists(p) && {
-        // tombstoned + journaled like every retiring commit: reader
-        // snapshot isolation holds, and the changes feed / per-commit
-        // time travel see the drop instead of a silent file vanish
-        GraftCommitLock.withLock(pmFs, new Path(dir), "drop-partition") {
-          val rels = listDataFiles(pmFs, p)
-            .map(GraftCommits.relOf(pmFs, new Path(dir), _))
-          val tomb = GraftRetired.retireFiles(pmFs, new Path(dir), Seq(p))
-          if (rels.nonEmpty)
-            GraftCommits.tryRecord(pmFs, new Path(dir), "delete",
-              adds = Nil,
-              removes = rels.map(
-                GraftCommits.Remove(_, tomb.getOrElse(""))))
-        }
-        true
+      ident: org.apache.spark.sql.catalyst.InternalRow): Boolean = {
+    val p = partitionDirOf(ident)
+    pmFs.exists(p) && {
+      // tombstoned + journaled like every retiring commit: reader
+      // snapshot isolation holds, and the changes feed / per-commit
+      // time travel see the drop instead of a silent file vanish
+      GraftCommitLock.withLock(pmFs, new Path(dir), "drop-partition") {
+        val rels = listDataFiles(pmFs, p)
+          .map(GraftCommits.relOf(pmFs, new Path(dir), _))
+        val tomb = GraftRetired.retireFiles(pmFs, new Path(dir), Seq(p))
+        if (rels.nonEmpty)
+          GraftCommits.tryRecord(pmFs, new Path(dir), "delete",
+            adds = Nil,
+            removes = rels.map(
+              GraftCommits.Remove(_, tomb.getOrElse(""))))
       }
+      true
     }
+  }
 
   override def replacePartitionMetadata(
       ident: org.apache.spark.sql.catalyst.InternalRow,
@@ -1463,20 +1416,10 @@ private[sources] class GraftTable(
       meta.bucketSpec.map { case (nb, c) => "buckets" -> s"$nb ($c)" }).asJava
 
   override def capabilities(): util.Set[TableCapability] =
-    if (readOnly) util.EnumSet.of(TableCapability.BATCH_READ)
-    else if (meta.bucketSpec.isDefined || meta.evolvedCols.nonEmpty)
-      // bucketed tables write through the v2 hive-layout path only —
-      // declaring V1_BATCH_WRITE would make Spark REQUIRE a V1Write.
-      // Evolved-spec tables too: the V1 append cannot keep evolved
-      // columns in the data files while laying out their directories
-      util.EnumSet.of(TableCapability.BATCH_READ,
-        TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE, TableCapability.OVERWRITE_DYNAMIC,
-        TableCapability.STREAMING_WRITE)
-    else util.EnumSet.of(TableCapability.BATCH_READ,
+    util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.OVERWRITE_DYNAMIC, TableCapability.STREAMING_WRITE)
+      TableCapability.TRUNCATE, TableCapability.OVERWRITE_DYNAMIC,
+      TableCapability.STREAMING_WRITE)
 
   /** Scans wrap the delegate builder to add what Spark's own V2 file
     * scans are missing: `SupportsRuntimeV2Filtering`. Without it, a
@@ -1495,7 +1438,7 @@ private[sources] class GraftTable(
     // listing census proves current, the delegate scan builder plans
     // over synthesized statuses — zero data-directory listings
     val manifestFsb: Option[FileScanBuilder] =
-      if (format == "parquet" && !readOnly && meta.evolvedCols.isEmpty &&
+      if (format == "parquet" && meta.evolvedCols.isEmpty &&
           meta.schema.isDefined &&
           meta.props.get(GraftManifestListing.Prop).contains("true"))
         GraftManifestListing.scanBuilder(spark, new Path(dir),
@@ -1521,35 +1464,19 @@ private[sources] class GraftTable(
               partitionSchema = pSchema, maxFilesPerTrigger = mft,
               maxBytesPerTrigger = mbt, ignoreDeletes = ignoreDel,
               renameAliases = meta.renameAliases,
-              evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly)
+              evolvedCols = meta.evolvedCols)
           case None =>
             new GraftScanBuilder(fsb, statsDir = stats,
               tableSchema = schema(), partitionSchema = pSchema,
               ignoreDeletes = ignoreDel,
               maxFilesPerTrigger = mft, maxBytesPerTrigger = mbt,
               renameAliases = meta.renameAliases,
-              evolvedCols = meta.evolvedCols,
-              pinToJournal = !readOnly)
+              evolvedCols = meta.evolvedCols)
         }
       case other => other
     }
   }
 
-  /** INSERT INTO (append) / INSERT OVERWRITE (truncate): a V1 write
-    * whose insert() routes through the engine's partitioned append and
-    * swap-replace — SQL writes get the identical crash-safety contract
-    * as the object API, because they ARE the object API. Dynamic
-    * partition overwrite (`INSERT OVERWRITE` under
-    * partitionOverwriteMode=dynamic, `df.writeTo(t)
-    * .overwritePartitions()`) has no V1 fallback in Spark, so it is a
-    * real v2 batch write: [[GraftPartitionedCow.DynamicOverwriteWrite]]
-    * stages hive-layout files invisibly and replaces exactly the
-    * partitions that received data — the engine's
-    * `overwritePartitions` semantics on the DSv2 surface, and the
-    * reference's incremental unit (`overwritePartitions()`,
-    * process_covid_ods.py:87) addressable purely by table NAME.
-    */
   /** `auto_analyze = true`: after a committed write (batch insert,
     * overwrite, row-level rewrite, or streaming epoch), refresh the
     * [[GraftStats]] skipping manifest incrementally — only the files
@@ -1559,14 +1486,13 @@ private[sources] class GraftTable(
     * data is already committed when it runs, so a failed refresh must
     * not fail the write — affected files simply scan unpruned, the
     * same fail-safe as having no manifest entry. The wrapper preserves
-    * the inner write's planning contracts ([[V1Write]]-ness for the
-    * V1_BATCH_WRITE capability check; `RequiresDistributionAndOrdering`
-    * for the hive-layout/bucketed clustering).
+    * the inner write's `RequiresDistributionAndOrdering` (the
+    * hive-layout/bucketed clustering).
     */
   private def withAutoAnalyze(w: Write): Write = {
     import org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering
     import org.apache.spark.sql.connector.write.streaming.StreamingWrite
-    if (!autoAnalyze || readOnly) return w
+    if (!autoAnalyze) return w
     // writer-side bloom maintenance (r12 item 5): hand the hive-layout
     // write its bloom spec so task writers accumulate filters as rows
     // stream through — the commit then PUBLISHES them with zero data
@@ -1612,7 +1538,7 @@ private[sources] class GraftTable(
       // point-lookup filters fresh at every commit too. Writer-shipped
       // filters publish FIRST (zero data re-read); the analyze after
       // is the fail-safe backstop for files without shipped filters
-      // (V1 appends, delta delete-only rows) — it finds shipped files
+      // (delta delete-only rows, streaming epochs) — it finds shipped files
       // covered and reads nothing for them. Advisory like the stats
       // refresh.
       meta.props.get("bloom_columns").foreach { cols =>
@@ -1635,8 +1561,8 @@ private[sources] class GraftTable(
       // auto-NDV (r13 item 4): writer-shipped registers publish FIRST
       // (zero data re-read — after the footer analyze above created
       // the entries they attach to), then the incremental analyzeNdv
-      // backstop covers files without shipped registers (V1 appends,
-      // timestamp columns, over-cap task fan-outs). Advisory like the
+      // backstop covers files without shipped registers (timestamp
+      // columns, over-cap task fan-outs). Advisory like the
       // other refreshes.
       meta.props.get("ndv_columns").foreach { cols =>
         try {
@@ -1711,14 +1637,6 @@ private[sources] class GraftTable(
         s.abort(e, ms)
     }
     w match {
-      case v1: V1Write => new V1Write {
-        override def toInsertableRelation: InsertableRelation = {
-          val inner = v1.toInsertableRelation
-          (data, overwrite) => { inner.insert(data, overwrite); refresh(None) }
-        }
-        override def toStreaming: StreamingWrite = stream(v1.toStreaming)
-        override def description(): String = v1.description()
-      }
       case rdo: RequiresDistributionAndOrdering =>
         new Write with RequiresDistributionAndOrdering {
           override def requiredDistribution = rdo.requiredDistribution()
@@ -1740,8 +1658,19 @@ private[sources] class GraftTable(
     }
   }
 
+  /** Every batch write is a v2 hive-layout write, whatever the table's
+    * shape: INSERT INTO is [[GraftPartitionedCow.AppendWrite]], INSERT
+    * OVERWRITE [[GraftPartitionedCow.TruncateReplaceWrite]], and dynamic
+    * partition overwrite (`INSERT OVERWRITE` under
+    * partitionOverwriteMode=dynamic, `df.writeTo(t)
+    * .overwritePartitions()`) [[GraftPartitionedCow
+    * .DynamicOverwriteWrite]], which replaces exactly the partitions
+    * that received data — the reference's incremental unit
+    * (`overwritePartitions()`, process_covid_ods.py:87) addressable
+    * purely by table NAME. Tasks stage invisible files; the driver
+    * commit publishes, retires and journals under the table lock.
+    */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(!readOnly, s"${name()} is a time-travel snapshot: read-only")
     // `upsertKeys` write option (r11 item 4): the STREAMING face of
     // this write becomes a per-epoch keyed upsert
     // ([[GraftPartitionedCow.StreamingUpsertWrite]]), and the builder
@@ -1782,19 +1711,10 @@ private[sources] class GraftTable(
         if (upsertKeys.isEmpty) base else asUpsert(base)
 
       /** Reroute ONLY the streaming face to the upsert sink; the batch
-        * face (and its V1Write-ness / distribution requirements) stays
-        * exactly what the mode produced.
+        * face (and its distribution requirements) stays exactly what
+        * the mode produced.
         */
       private def asUpsert(base: Write): Write = base match {
-        case v1: V1Write => new V1Write {
-          override def toInsertableRelation: InsertableRelation =
-            v1.toInsertableRelation
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            upsertWrite()
-          override def description(): String =
-            s"graft-upsert ${v1.description()}"
-        }
         case rdo: org.apache.spark.sql.connector.write
             .RequiresDistributionAndOrdering => new Write
             with org.apache.spark.sql.connector.write
@@ -1824,147 +1744,98 @@ private[sources] class GraftTable(
         }
       }
 
-      override def build(): Write = withAutoAnalyze(withUpsert(mode match {
-        // OVERWRITE_DYNAMIC is declared unconditionally in capabilities,
-        // so with partitionOverwriteMode=dynamic set SESSION-WIDE Spark
-        // plans OverwritePartitionsDynamic for ANY insert-overwrite —
-        // including unpartitioned tables, where "replace the partitions
-        // that received data" degenerates to a full replace. Route that
-        // case to the truncate semantics instead of refusing (r10
-        // ADVICE): bucketed tables take the bucket-tagging v2 full
-        // replace, plain ones the V1 versioned swap-replace.
-        case "dynamic" if effectivePartitionCols.isEmpty =>
-          // OverwritePartitionsDynamicExec has NO V1 fallback, so this
-          // must be a real v2 write even for plain tables
-          buildV2Replace(info.schema())
-        case "dynamic" =>
-          // mixed-era refusal: "replace the partitions that received
-          // data" is directory-granular, but an old-era file of the
-          // same LOGICAL partition lives in a parent directory the
-          // replacement never touches — its rows would survive a
-          // replace that should supersede them
-          require(evolvedCols.isEmpty,
-            s"${name()}: dynamic partition overwrite is refused while " +
-              "the partition spec evolution is un-materialized (file " +
-              "eras at mixed depths) — CALL system.compact to migrate " +
-              "the table to its current spec first")
-          val parts = effectivePartitionCols
-          val schema = info.schema()
-          val bad = parts.filter { c =>
-            schema.fields.find(_.name.equalsIgnoreCase(c))
-              .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
-          }
-          require(bad.isEmpty,
-            s"${name()}: partition columns ${bad.mkString(", ")} have types " +
-              "whose directory rendering is ambiguous (supported: string, " +
-              "integral, boolean, date)")
-          val fs = new Path(dir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val old = listDataFiles(fs, new Path(dir))
-          new GraftPartitionedCow.DynamicOverwriteWrite(
-            spark, format, schema, dir, parts, old, meta.bucketSpec)
-        case m => buildBatch(replace = m == "truncate")
-      }))
+      override def build(): Write = withAutoAnalyze(withUpsert {
+        requireRenderable(info.schema())
+        mode match {
+          // OVERWRITE_DYNAMIC is declared unconditionally in capabilities,
+          // so with partitionOverwriteMode=dynamic set SESSION-WIDE Spark
+          // plans OverwritePartitionsDynamic for ANY insert-overwrite —
+          // including unpartitioned tables, where "replace the partitions
+          // that received data" degenerates to a full replace. Route that
+          // case to the truncate semantics instead of refusing (r10
+          // ADVICE).
+          case "dynamic" if effectivePartitionCols.isEmpty => replaceWrite()
+          case "dynamic" =>
+            // mixed-era refusal: "replace the partitions that received
+            // data" is directory-granular, but an old-era file of the
+            // same LOGICAL partition lives in a parent directory the
+            // replacement never touches — its rows would survive a
+            // replace that should supersede them
+            require(evolvedCols.isEmpty,
+              s"${name()}: dynamic partition overwrite is refused while " +
+                "the partition spec evolution is un-materialized (file " +
+                "eras at mixed depths) — CALL system.compact to migrate " +
+                "the table to its current spec first")
+            val fs = new Path(dir)
+              .getFileSystem(spark.sparkContext.hadoopConfiguration)
+            val old = listDataFiles(fs, new Path(dir))
+            new GraftPartitionedCow.DynamicOverwriteWrite(spark, format,
+              info.schema(), dir, effectivePartitionCols, old, meta.bucketSpec)
+          case "truncate" => replaceWrite()
+          case _ =>
+            new GraftPartitionedCow.AppendWrite(spark, format,
+              info.schema(), dir, effectivePartitionCols, meta.bucketSpec,
+              info.queryId(), () => requireStreamable(info.schema()))
+        }
+      })
 
-      /** Staged-invisible v2 full replace (with version retention when
-        * configured) — the truncate path for bucketed tables and the
-        * dynamic-overwrite degenerate case above.
+      /** Staged-invisible full replace: publishes the new generation,
+        * retires every pre-existing data file and journals a `replace`
+        * commit. `toStreaming` is the Complete-output-mode per-epoch
+        * refresh (Spark calls `truncate()` before `toStreaming` for it).
         */
-      private def buildV2Replace(schema: StructType): Write = {
+      private def replaceWrite(): Write = {
         val fs = new Path(dir)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val old = listDataFiles(fs, new Path(dir))
         new GraftPartitionedCow.TruncateReplaceWrite(spark, format,
-          schema, dir, effectivePartitionCols, old, meta.bucketSpec,
-          if (versions > 0) Some((s"$dir.__versions", versions)) else None,
-          info.queryId())
+          info.schema(), dir, effectivePartitionCols, old, meta.bucketSpec,
+          info.queryId(), () => requireStreamable(info.schema()))
       }
-
-      private def buildBatch(replace: Boolean): Write =
-        if (meta.bucketSpec.isDefined || evolvedCols.nonEmpty) {
-          // bucketed tables write through the v2 hive-layout path — the
-          // V1 append cannot tag bucket files. Evolved-spec tables too:
-          // the hive-layout writers keep evolved columns IN the data
-          // (prepare's keepInData) while laying out the current spec
-          if (replace) buildV2Replace(info.schema())
-          else
-            new GraftPartitionedCow.BucketedAppendWrite(spark, format,
-              info.schema(), dir, effectivePartitionCols, meta.bucketSpec,
-              info.queryId())
-        } else
-          new V1Write {
-            override def toInsertableRelation: InsertableRelation =
-              (data, overwriteFlag) => {
-                val parts = effectivePartitionCols
-                // write-time CHECK constraints ride inside
-                // engine.append / engine.createOrReplace (the object
-                // API guards THERE, so this path inherits it without
-                // a second filter)
-                if (replace || overwriteFlag)
-                  // a full replace supersedes every row — the dir swap
-                  // carries the eq sidecars away with the old generation
-                  engine.createOrReplace(data, layer, table, parts)
-                else {
-                  // appended rows would be wrongly subject to LIVE
-                  // equality deletes (their floor is -1) — refuse
-                  GraftEqDel.requireNone(
-                    new Path(dir).getFileSystem(
-                      spark.sparkContext.hadoopConfiguration),
-                    new Path(dir), "a batch append")
-                  engine.append(data, layer, table, parts)
-                }
-              }
-            /** `df.writeStream.toTable("<cat>.<layer>.<table>")` —
-              * exactly-once-per-epoch streaming: Append output mode
-              * lands each epoch as an append
-              * ([[GraftPartitionedCow.StreamingAppendWrite]]); Complete
-              * output mode (`replace` here — Spark calls `truncate()`
-              * before `toStreaming` for it) lands each epoch as a full
-              * refresh ([[GraftPartitionedCow.StreamingReplaceWrite]]).
-              */
-            override def toStreaming
-                : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-              val parts = effectivePartitionCols
-              val schema = info.schema()
-              // `writeStream.toTable` hands the QUERY's schema straight
-              // through (no ResolveOutputRelation cast pass on this
-              // path), so a type drift — e.g. a DOUBLE landing in a
-              // BIGINT column — would write files the table's declared
-              // schema can never read back. Fail the mismatch at query
-              // START, not at first read.
-              meta.schema.foreach { declared =>
-                schema.fields.foreach { f =>
-                  declared.fields.find(_.name.equalsIgnoreCase(f.name))
-                    .foreach { d =>
-                      require(d.dataType == f.dataType,
-                        s"${name()}: streaming query writes ${f.name}: " +
-                          s"${f.dataType.simpleString} but the table " +
-                          s"declares ${d.dataType.simpleString} — cast in " +
-                          "the query (files would be unreadable)")
-                    }
-                }
-              }
-              val bad = parts.filter { c =>
-                schema.fields.find(_.name.equalsIgnoreCase(c))
-                  .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
-              }
-              require(bad.isEmpty,
-                s"${name()}: partition columns ${bad.mkString(", ")} have " +
-                  "types whose directory rendering is ambiguous")
-              if (replace)
-                new GraftPartitionedCow.StreamingReplaceWrite(
-                  spark, format, schema, dir, parts, info.queryId())
-              else
-                new GraftPartitionedCow.StreamingAppendWrite(
-                  spark, format, schema, dir, parts, info.queryId())
-            }
-          }
     }
     if (upsertKeys.nonEmpty)
       new GraftWriteBuilder
         with org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend
     else new GraftWriteBuilder
   }
+
+  /** Identity partition columns must render unambiguously as directory
+    * values (string, integral, boolean, date) — the hive-layout writer
+    * names directories from the raw value, so e.g. a timestamp would
+    * read back wrong. Hidden-partitioning transforms derive their own
+    * tokens.
+    */
+  private def requireRenderable(schema: StructType): Unit = {
+    val bad = effectivePartitionCols.filter { c =>
+      GraftTransforms.parseOpt(c).isEmpty &&
+      schema.fields.find(_.name.equalsIgnoreCase(c))
+        .forall(f => !GraftPartitionedCow.dirRenderable(f.dataType))
+    }
+    require(bad.isEmpty,
+      s"${name()}: partition columns ${bad.mkString(", ")} have types " +
+        "whose directory rendering is ambiguous (supported: string, " +
+        "integral, boolean, date)")
+  }
+
+  /** Start-time refusal of `df.writeStream.toTable(...)`, run by every
+    * write's streaming face. `toTable` hands the QUERY's schema
+    * straight through (no ResolveOutputRelation cast pass), so a type
+    * drift — e.g. a DOUBLE landing in a BIGINT column — would write
+    * files the table's declared schema can never read back: fail the
+    * mismatch at query START, not at first read.
+    */
+  private def requireStreamable(schema: StructType): Unit =
+    meta.schema.foreach { declared =>
+      schema.fields.foreach { f =>
+        declared.fields.find(_.name.equalsIgnoreCase(f.name)).foreach { d =>
+          require(d.dataType == f.dataType,
+            s"${name()}: streaming query writes ${f.name}: " +
+              s"${f.dataType.simpleString} but the table declares " +
+              s"${d.dataType.simpleString} — cast in the query (files " +
+              "would be unreadable)")
+        }
+      }
+    }
 
   /** Fully-quoted SQL identifier of this table (for re-reads through
     * the session catalog from driver-side commit logic).
@@ -2004,7 +1875,6 @@ private[sources] class GraftTable(
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder = {
-    require(!readOnly, s"${name()} is a time-travel snapshot: read-only")
     // row-level operation scans (COW capture, MOR positional) bypass
     // the alias-merging read wrapper — a rewrite would null renamed
     // columns in pre-rename files. Compact first (it reads through the
@@ -2044,8 +1914,8 @@ private[sources] class GraftTable(
         // whole data files (GraftCommits.preRoot).
         override def requiredMetadataAttributes(): Array[NamedReference] =
           if (!GraftDeltaMor.captureEnabled(spark) ||
-            GraftTable.this.schema().fieldNames
-              .exists(GraftDeltaMor.isEngineMetaField)) Array.empty
+            !GraftDeltaMor.mirrorsExposed(GraftTable.this.schema()))
+            Array.empty
           else GraftTable.this.schema().fields.map(f =>
             Expressions.column(GraftDeltaMor.preColName(f.name)))
         override def newScanBuilder(
@@ -2268,9 +2138,8 @@ private[sources] class GraftTable(
     // TRUNCATE (all conjuncts ALWAYS_TRUE) is supported on EVERY
     // table — the unconditional branch of deleteWhere needs no
     // partitioning and consumes DV + equality-delete sidecars
-    (!readOnly && predicates.nonEmpty &&
-      predicates.forall(_.name == "ALWAYS_TRUE")) ||
-    !readOnly && {
+    (predicates.nonEmpty &&
+      predicates.forall(_.name == "ALWAYS_TRUE")) || {
       // ANCHOR columns only: a directory drop at anchor granularity
       // takes BOTH eras' files of the logical partition with it; an
       // evolved-column constraint cannot be a directory drop for
@@ -2294,7 +2163,7 @@ private[sources] class GraftTable(
       // mixed-depth eras (and anchor values live in dirs) — Spark then
       // plans the positional DELTA path, which reads through the
       // catalog's era-aware scan and is correct across eras.
-      !readOnly && morEnabled && evolvedCols.isEmpty &&
+      morEnabled && evolvedCols.isEmpty &&
         GraftDv.translate(predicates, schema()).isDefined)
 
   private def partitionDeletable(predicates: Array[Predicate]): Boolean = {
@@ -2306,7 +2175,6 @@ private[sources] class GraftTable(
   }
 
   override def deleteWhere(predicates: Array[Predicate]): Unit = {
-    require(!readOnly, s"${name()} is a time-travel snapshot: read-only")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (predicates.forall(_.name == "ALWAYS_TRUE")) {
       // TRUNCATE / unconditional DELETE: every data child is TOMBSTONED
@@ -2643,8 +2511,7 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
     maxBytesPerTrigger: Option[Long] = None,
     ignoreDeletes: Boolean = false,
     renameAliases: Map[String, Seq[String]] = Map.empty,
-    evolvedCols: Seq[String] = Nil,
-    pinToJournal: Boolean = true)
+    evolvedCols: Seq[String] = Nil)
   extends ScanBuilder
   with SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -2658,7 +2525,7 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     val (meta, data) = requiredSchema.fields.partition(f =>
-      GraftDeltaMor.isEngineMetaField(f.name))
+      GraftDeltaMor.servedAsMeta(tableSchema, f.name))
     metaFields = meta.toSeq
     // preimage mirrors copy their SOURCE column's value per row — the
     // source must be in the delegate read even when the query itself
@@ -2819,14 +2686,12 @@ private[sources] final class GraftScanBuilder(delegate: FileScanBuilder,
             maxFilesPerTrigger = maxFilesPerTrigger,
             maxBytesPerTrigger = maxBytesPerTrigger,
             ignoreDeletes = ignoreDeletes,
-            renameAliases = renameAliases,
-            pinToJournal = pinToJournal)
+            renameAliases = renameAliases)
         case None => new GraftRuntimeFilterScan(fs, statsDir = statsDir,
           maxFilesPerTrigger = maxFilesPerTrigger,
           maxBytesPerTrigger = maxBytesPerTrigger,
           dvTableDir = statsDir, ignoreDeletes = ignoreDeletes,
-          renameAliases = renameAliases,
-          pinToJournal = pinToJournal)
+          renameAliases = renameAliases)
       }
       case other => other
     }
@@ -2879,9 +2744,7 @@ private[sources] final class GraftBucketedScan(initial: FileScan,
     ignoreDeletes: Boolean = false,
     // RENAME COLUMN alias map (current lower name -> retired names);
     // see [[GraftRename]]
-    renameAliases: Map[String, Seq[String]] = Map.empty,
-    // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1)
-    pinToJournal: Boolean = true)
+    renameAliases: Map[String, Seq[String]] = Map.empty)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning
   with SupportsRuntimeV2Filtering
@@ -3042,7 +2905,8 @@ private[sources] final class GraftBucketedScan(initial: FileScan,
   private def pinKeep(planned: Seq[PartitionedFile])
       : Option[PartitionedFile => Boolean] =
     (statsDir, dvFs) match {
-      case (Some(td), Some(fs)) if pinToJournal =>
+      // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1)
+      case (Some(td), Some(fs)) =>
         GraftPinnedScan.keepTest(fs, td, current, planned)
       case _ => None
     }
@@ -3243,11 +3107,7 @@ private[sources] final class GraftRuntimeFilterScan(
     // into a rewrite's carryover
     dvTableDir: Option[Path] = None,
     // RENAME COLUMN alias map; see [[GraftRename]]
-    renameAliases: Map[String, Seq[String]] = Map.empty,
-    // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1):
-    // off for read-only time-travel dirs (their journal is an archived
-    // copy, not a live commit axis)
-    pinToJournal: Boolean = true)
+    renameAliases: Map[String, Seq[String]] = Map.empty)
   extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics {
 
   @volatile private var current: FileScan = initial
@@ -3329,7 +3189,8 @@ private[sources] final class GraftRuntimeFilterScan(
       // capture-mode scans are excluded at toBatch (a COW rewrite reads
       // its own groups under the very lock the pin would consult)
       val parts = (dvTableDir, dvFs) match {
-        case (Some(td), Some(fs)) if pinToJournal =>
+        // journal-pinned snapshot reads ([[GraftPinnedScan]], r16 item 1)
+        case (Some(td), Some(fs)) =>
           GraftPinnedScan.pin(fs, td, current, parts0)
         case _ => parts0
       }
@@ -4839,9 +4700,7 @@ private[graft] object GraftPartitionedCow {
       * renamed into the sibling `.__retired/<commit>/` area so a reader
       * that planned before this commit still finds its snapshot's bytes
       * ([[GraftRetired]], r12 item 2: never delete at commit). Physical
-      * deletion is deferred to `CALL system.remove_orphans`. Full-replace
-      * writes with version retention override this to MOVE files into
-      * the version store instead (same reader-isolation property).
+      * deletion is deferred to `CALL system.remove_orphans`.
       */
     protected def retire(gone: Seq[Path], fs: FileSystem): Option[String] =
       GraftRetired.retireFiles(fs, new Path(dir), gone)
@@ -4870,8 +4729,7 @@ private[graft] object GraftPartitionedCow {
 
     /** Whether this write may commit while equality-delete sidecars
       * ([[GraftEqDel]]) are live. Only the full replace is — it
-      * supersedes every row, so it clears (or version-archives) the
-      * sidecars. Everything else cannot reason about epoch floors and
+      * supersedes every row, so it clears the sidecars. Everything else cannot reason about epoch floors and
       * REFUSES with a pointer to rewrite_deletes.
       */
     protected def eqDeleteSafe: Boolean = false
@@ -4936,7 +4794,6 @@ private[graft] object GraftPartitionedCow {
         }
         // phase 2 — retire the superseded generation per the policy;
         // deletion vectors of retired files are inert — drop them
-        // (version-archiving retires MOVE the sidecars first)
         GraftPartitionedCow.onBetweenPublishAndRetire(dir)
         val gone = retired(published, fs)
         val tomb = retire(gone, fs)
@@ -5212,18 +5069,21 @@ private[graft] object GraftPartitionedCow {
     }
   }
 
-  /** Append to a BUCKETED table: a v2 hive-layout write (the V1 append
-    * cannot tag buckets) that retires nothing; the clustered
-    * distribution on the bucket transform means each task owns whole
-    * buckets — one new file per bucket per append.
+  /** INSERT INTO / `writeTo(t).append()`: a hive-layout write that
+    * retires nothing. The clustered distribution on the partition (and
+    * bucket) transforms means each task owns whole groups — one new
+    * file per (partition, bucket) per append, bucket-tagged when the
+    * table has a bucket spec. `streamGuard` runs the table's start-time
+    * refusals before the streaming face is handed out.
     */
-  final class BucketedAppendWrite(
+  final class AppendWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
       dir: String, partitionCols: Seq[String],
-      bucketSpec: Option[(Int, String)], queryId: String)
+      bucketSpec: Option[(Int, String)], queryId: String,
+      streamGuard: () => Unit)
     extends HiveLayoutWrite(spark, format, dataSchema, dir, partitionCols,
       Nil, bucketSpec) with RequiresDistributionAndOrdering {
-    override def description(): String = s"graft bucketed-append $dir"
+    override def description(): String = s"graft append $dir"
     override protected def journalKind: String = "append"
     override def requiredDistribution(): Distribution =
       clusteringOf(partitionCols, bucketSpec)
@@ -5234,50 +5094,42 @@ private[graft] object GraftPartitionedCow {
     override protected def pruneEmptied: Boolean = false
     override protected def retired(published: Seq[Path],
         fs: FileSystem): Seq[Path] = Nil
-    /** Streaming appends keep the bucket layout too — the epoch-deduped
-      * streaming write with the bucket spec threaded through.
+    /** Append output mode: the epoch-deduped streaming append, keeping
+      * the bucket layout.
       */
     override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      streamGuard()
       new StreamingAppendWrite(spark, format, dataSchema, dir,
         partitionCols, queryId, bucketSpec)
+    }
   }
 
-  /** INSERT OVERWRITE through the v2 path: staged-invisible full
-    * replace — publish the new generation (bucket-tagged when the table
-    * has a bucket spec), retire every pre-existing data file in the
-    * same commit. Used by bucketed tables (whose files the V1 swap
-    * cannot tag) and by `INSERT OVERWRITE` of an unpartitioned table
-    * planned as OverwritePartitionsDynamic (session-wide dynamic mode;
-    * no V1 fallback exists for that plan — r10 ADVICE).
-    *
-    * `versionStore = Some((versionsDir, retain))` preserves the
-    * version-retention contract of the V1 swap path: the retired
-    * generation is a COMPLETE previous table state (this is a full
-    * replace), so instead of deleting it the commit MOVES each retired
-    * file — relative hive path preserved — into the next `v<N>`
-    * directory of the store that `VERSION AS OF` / `readVersion`
-    * resolve against, pruned to the newest `retain`. One rename per
-    * retired file: same cost class as the deletes it replaces.
+  /** INSERT OVERWRITE / `overwrite(true)`: staged-invisible full replace
+    * — publish the new generation (bucket-tagged when the table has a
+    * bucket spec), retire every pre-existing data file in the same
+    * commit, journal a `replace` record. The table directory and its
+    * commit journal survive, so the replaced state stays addressable
+    * as `VERSION AS OF 'c<id>'` until its tombstones are GC'd.
     */
   final class TruncateReplaceWrite(
       spark: SparkSession, format: String, dataSchema: StructType,
       dir: String, partitionCols: Seq[String], oldFiles: Seq[Path],
-      bucketSpec: Option[(Int, String)],
-      versionStore: Option[(String, Int)] = None,
-      queryId: String = "")
+      bucketSpec: Option[(Int, String)], queryId: String,
+      streamGuard: () => Unit)
     extends HiveLayoutWrite(spark, format, dataSchema, dir, partitionCols,
       oldFiles, bucketSpec) with RequiresDistributionAndOrdering {
     override def description(): String = s"graft truncate-replace $dir"
     override protected def journalKind: String = "replace"
-    /** Complete-output-mode streaming on a BUCKETED table: per-epoch
-      * full refresh that keeps the bucket-tagged layout (versioning
-      * does not apply per-epoch — see [[StreamingReplaceWrite]]).
+    /** Complete output mode: per-epoch full refresh keeping the table's
+      * layout ([[StreamingReplaceWrite]]).
       */
     override def toStreaming
-        : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
+        : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+      streamGuard()
       new StreamingReplaceWrite(spark, format, dataSchema, dir,
         partitionCols, queryId, bucketSpec)
+    }
     override def requiredDistribution(): Distribution =
       clusteringOf(partitionCols, bucketSpec)
     override def requiredOrdering(): Array[SortOrder] =
@@ -5286,55 +5138,14 @@ private[graft] object GraftPartitionedCow {
     override protected def sortedInput: Boolean = true
     override protected def pruneEmptied: Boolean = true
     // a full replace supersedes every row: live equality-delete
-    // sidecars are cleared (or archived with the retained version
-    // below) rather than refusing — this IS a materialization path
+    // sidecars are consumed by it — this IS a materialization path
     override protected def eqDeleteSafe: Boolean = true
     override protected def retired(published: Seq[Path],
         fs: FileSystem): Seq[Path] = oldFiles
     override protected def retire(gone: Seq[Path], fs: FileSystem)
         : Option[String] = {
-      val tomb: Option[String] = versionStore match {
-        case Some((store, retain)) if gone.nonEmpty =>
-          val storeP = new Path(store)
-          val existing: Seq[Int] =
-            if (!fs.exists(storeP)) Nil
-            else fs.listStatus(storeP).toSeq.map(_.getPath.getName)
-              .filter(_.matches("v\\d{6}")).map(_.drop(1).toInt).sorted
-          val vDir = new Path(storeP,
-            f"v${existing.lastOption.getOrElse(0) + 1}%06d")
-          val qualBase = fs.makeQualified(new Path(dir)).toString
-          gone.foreach { f =>
-            val rel = f.toString.stripPrefix(qualBase).stripPrefix("/")
-            // an archived file's deletion vector travels WITH it: a
-            // VERSION AS OF read of the snapshot must apply the same
-            // deletes it had live (rename preserves the file mtime the
-            // vector is keyed by)
-            val dv = GraftDv.dvPath(new Path(dir), rel)
-            if (fs.exists(dv)) {
-              val dvDest = GraftDv.dvPath(vDir, rel)
-              fs.mkdirs(dvDest.getParent)
-              require(fs.rename(dv, dvDest),
-                s"version archive: could not retain deletion vector $dv")
-            }
-            val dest = new Path(vDir, rel)
-            fs.mkdirs(dest.getParent)
-            require(fs.rename(f, dest),
-              s"version archive: could not retain $f as $dest")
-          }
-          // equality-delete sidecars travel with the snapshot too —
-          // the archived generation must read with its deletes applied
-          GraftEqDel.archiveInto(fs, new Path(dir), vDir)
-          existing.dropRight(retain - 1).foreach { v =>
-            fs.delete(new Path(storeP, f"v$v%06d"), true)
-          }
-          None // preserved in the version store, not the tombstone area
-        case _ =>
-          val t = super.retire(gone, fs)
-          // the replace superseded every row: live equality deletes
-          // are consumed by it (this commit IS their materialization)
-          GraftEqDel.clearAll(fs, new Path(dir))
-          t
-      }
+      val tomb = super.retire(gone, fs)
+      GraftEqDel.clearAll(fs, new Path(dir))
       // every surviving row was rewritten under the CURRENT column
       // names: rename aliases are materialized by this replace
       val m = GraftTableMeta.read(fs, new Path(dir))

@@ -18,7 +18,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   * Mechanics:
   *  - the lock is a SIBLING file (`<tableDir>.__lock`, beside the
-  *    `.__versions` / `.__swap*` siblings) so full-directory swaps of
+  *    `.__retired` / `.__swap*` siblings) so full-directory swaps of
   *    the table itself never move or orphan it, and a writer racing a
   *    swap cannot re-create the live directory by locking it;
   *  - acquisition is an atomic create-exclusive (`fs.create(p,

@@ -604,20 +604,20 @@ private[graft] object GraftCommits {
     nextId
   }
 
-  /** Append a record whose adds are CLAIMED as the visible batch files
-    * not present in `before` (for publish paths that don't know their
-    * final file names — the V1 append, delegated Spark writes). The
+  /** Append a record whose adds are CLAIMED as the visible batch files not
+    * present in `before` (for publish paths that don't know their final
+    * file names — the object API's append, delegated Spark writes). The
     * claim runs under the lock and ALSO subtracts the journal's own
-    * accounted-live set (ADVICE r15 medium): a `before` listed before
-    * an unlocked save can miss a concurrent committer's just-published
-    * files, and two such committers would otherwise each claim the
-    * other's files — the feed would serve those rows as inserts TWICE
-    * under two ids. Diffing against the journal's accounting is
-    * monotonic under the lock, so every file lands in exactly one
-    * record's adds (a racing pair may attribute the slower save to the
-    * faster record's id — same rows, served once, net-change intact).
-    * An unjournaled foreign writer still degrades to the loud feed
-    * accounting refusal, never misattribution of a SERVED row.
+    * accounted-live set (ADVICE r15 medium): a `before` listed before an
+    * unlocked save can miss a concurrent committer's just-published files,
+    * and two such committers would otherwise each claim the other's files —
+    * the feed would serve those rows as inserts TWICE under two ids.
+    * Diffing against the journal's accounting is monotonic under the lock,
+    * so every file lands in exactly one record's adds (a racing pair may
+    * attribute the slower save to the faster record's id — same rows,
+    * served once, net-change intact). An unjournaled foreign writer still
+    * degrades to the loud feed accounting refusal, never misattribution of
+    * a SERVED row.
     */
   def recordClaiming(fs: FileSystem, tableDir: Path, kind: String,
       before: Set[String], removes: Seq[Remove] = Nil,

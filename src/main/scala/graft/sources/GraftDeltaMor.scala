@@ -114,10 +114,22 @@ private[sources] object GraftDeltaMor {
   def isEngineMetaField(name: String): Boolean =
     isMetaField(name) || isPreField(name)
 
+  /** A user column under either reserved name disables the mirrors
+    * (the coordinate columns keep their hard require in changesSchema).
+    */
+  def mirrorsExposed(schema: StructType): Boolean =
+    !schema.fieldNames.exists(isEngineMetaField)
+
+  /** Whether a requested column of a table with this schema is served
+    * by the positional [[MetaScan]] rather than read from the files: a
+    * coordinate, or a preimage mirror the table actually exposes — a
+    * user DATA column named `_graft_pre_*` stays a data column.
+    */
+  def servedAsMeta(schema: StructType, name: String): Boolean =
+    isMetaField(name) || (isPreField(name) && mirrorsExposed(schema))
+
   def metadataColumns(schema: StructType): Array[MetadataColumn] =
-    // a user column under either reserved name disables the mirrors
-    // (the coordinate columns keep their hard require in changesSchema)
-    if (schema.fieldNames.exists(isEngineMetaField)) metadataColumns
+    if (!mirrorsExposed(schema)) metadataColumns
     else metadataColumns ++ schema.fields.map { f =>
       new MetadataColumn {
         override def name(): String = preColName(f.name)

@@ -251,19 +251,6 @@ private[graft] object GraftEqDel {
     try fs.delete(eqDir(tableDir), true)
     catch { case NonFatal(_) => () }
 
-  /** Move the live sidecars into an archived version directory (the
-    * TRUNCATE-replace retention path: a `VERSION AS OF` read of the
-    * snapshot must apply the same deletes it had live).
-    */
-  def archiveInto(fs: FileSystem, tableDir: Path, vDir: Path): Unit = {
-    val d = eqDir(tableDir)
-    if (fs.exists(d)) {
-      fs.mkdirs(vDir)
-      require(fs.rename(d, new Path(vDir, DirName)),
-        s"version archive: could not retain equality deletes $d")
-    }
-  }
-
   // ---- epoch floors ---------------------------------------------------------
 
   private val StreamTagRe = "-s([0-9a-f]{8})-e(\\d+)-".r
@@ -637,7 +624,7 @@ private[graft] object GraftEqDel {
       extTypes, ix.tag, ix.maxEpoch, bc)
   }
 
-  // ---- raw path reads (object API, archived versions) -------------------------
+  // ---- raw path reads (object API) -------------------------------------------
 
   /** Apply a directory's equality deletes to a raw path read: derive
     * each row's file floor from `_metadata.file_path` and null-safe

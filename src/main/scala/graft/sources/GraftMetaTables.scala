@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -12,12 +12,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Iceberg-style METADATA TABLES, addressed as nested identifiers —
-  * `SELECT ... FROM cat.ns.t.files` / `cat.ns.t.history` (Iceberg's
-  * `db.table.files` / `db.table.history` inspection surface; the
+  * `SELECT ... FROM cat.ns.t.files` / `cat.ns.t.commits` (Iceberg's
+  * `db.table.files` / `db.table.snapshots` inspection surface; the
   * reference operates Iceberg v2 tables, process_covid_raw.py:102-105,
   * whose operators inspect exactly these).
   *
-  * Both are [[LocalScan]]s: the rows are the driver-side directory
+  * All are [[LocalScan]]s: the rows are the driver-side directory
   * bookkeeping every scan already pays (file listing, sidecar headers)
   * — never data reads. Planned as `LocalTableScanExec`: zero tasks,
   * zero file opens, any size table. `files` row counts come from the
@@ -34,12 +34,6 @@ private[sources] object GraftMetaTables {
     StructField("records", LongType, nullable = true),
     StructField("stream_epoch", LongType, nullable = true),
     StructField("has_dv", BooleanType, nullable = false)))
-
-  val HistorySchema: StructType = StructType(Seq(
-    StructField("version", IntegerType, nullable = true),
-    StructField("is_live", BooleanType, nullable = false),
-    StructField("published_at", TimestampType, nullable = false),
-    StructField("path", StringType, nullable = false)))
 
   val CommitsSchema: StructType = StructType(Seq(
     StructField("commit_id", LongType, nullable = false),
@@ -171,28 +165,6 @@ private[sources] object GraftMetaTables {
       row.update(5, dvs.contains(r))
       row: InternalRow
     }.toArray
-  }
-
-  /** `<table>.history`: the retained full-replace versions (what
-    * VERSION AS OF / TIMESTAMP AS OF resolve against) plus the live
-    * state, publish-ordered.
-    */
-  def historyRows(spark: SparkSession, fs: FileSystem, root: String,
-      layer: String, table: String, versions: Seq[Int])
-      : Array[InternalRow] = {
-    def rowOf(v: Option[Int], p: Path): InternalRow = {
-      val row = new GenericInternalRow(4)
-      row.update(0, v.map(java.lang.Integer.valueOf).orNull)
-      row.update(1, v.isEmpty)
-      row.update(2, fs.getFileStatus(p).getModificationTime * 1000L)
-      row.update(3, UTF8String.fromString(p.toString))
-      row
-    }
-    val vs = versions.sorted.map { v =>
-      rowOf(Some(v),
-        new Path(s"$root/$layer/$table.__versions/" + f"v$v%06d"))
-    }
-    (vs :+ rowOf(None, new Path(s"$root/$layer/$table"))).toArray
   }
 }
 

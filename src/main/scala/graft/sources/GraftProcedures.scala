@@ -34,17 +34,16 @@ import graft.runtime.Catalog
   *    only the hive partitions that accreted >= min_files files
   *    ([[Catalog.compactPartitionsByName]]); one row per compacted
   *    partition, zero rows = nothing touched (and nothing read).
-  *  - `history(table)` — one row per retained time-travel version
-  *    (the `VERSION AS OF` inventory, discoverable from SQL).
-  *  - `rollback(table, version)` — restore a retained version through
-  *    the catalog's own write path ([[Catalog.restoreVersionByName]]:
-  *    layout survives, the replaced state is archived first).
+  *  - `rollback_to_commit(table, commit)` — restore the state as of a
+  *    commit-journal id ([[GraftCommits.rollbackToCommit]]; Iceberg's
+  *    rollback_to_snapshot). The journal is the table's one history:
+  *    `<table>.commits` lists it, `VERSION AS OF 'c<id>'` reads it.
   *  - `remove_orphans(table, older_than_ms)` — delete abandoned staged
   *    files and committer scratch older than the grace
   *    ([[Catalog.removeOrphansByName]]).
-  *  - `expire_versions(table, keep)` — reclaim retained time-travel
-  *    versions beyond the newest `keep`
-  *    ([[Catalog.expireVersionsByName]]; Iceberg's expire_snapshots).
+  *  - `expire_versions(table)` — fold the journal prefix at or below
+  *    its retention floor into a checkpoint and drop those records
+  *    ([[GraftCommits.expire]]; Iceberg's expire_snapshots).
   *  - `rewrite_deletes(table)` — materialize merge-on-read deletion
   *    vectors into clean data files ([[GraftDv.rewriteDeletes]];
   *    Iceberg's rewrite_position_delete_files folded into the data
@@ -63,9 +62,8 @@ object GraftProcedures {
   def names: Array[String] =
     Array("analyze", "analyze_bloom", "cluster", "compact",
       "compact_partitions", "evolve_partitioning", "expire_versions",
-      "history", "refresh_materialized_view", "remove_orphans",
-      "rewrite_deletes", "rollback", "rollback_to_commit",
-      "table_state")
+      "refresh_materialized_view", "remove_orphans", "rewrite_deletes",
+      "rollback_to_commit", "table_state")
 
   def load(procName: String, engine: () => Catalog,
       catName: () => String = () => ""): UnboundProcedure =
@@ -77,12 +75,10 @@ object GraftProcedures {
       case "compact_partitions" => new CompactPartitionsProc(engine)
       case "evolve_partitioning" => new EvolvePartitioningProc(engine)
       case "expire_versions" => new ExpireVersionsProc(engine)
-      case "history" => new HistoryProc(engine)
       case "refresh_materialized_view" =>
         new RefreshMaterializedViewProc(catName)
       case "remove_orphans" => new RemoveOrphansProc(engine)
       case "rewrite_deletes" => new RewriteDeletesProc(engine)
-      case "rollback" => new RollbackProc(engine)
       case "rollback_to_commit" => new RollbackToCommitProc(engine)
       case "table_state" => new TableStateProc(engine)
       case other => throw new IllegalArgumentException(
@@ -550,24 +546,6 @@ object GraftProcedures {
     }
   }
 
-  private final class HistoryProc(engine: () => Catalog)
-    extends MaintenanceProc("history") {
-    override def description(): String =
-      "retained time-travel versions, oldest first — the VERSION AS " +
-        "OF inventory; zero rows = nothing retained"
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("<layer>.<table>").build())
-    private val out = StructType(Seq(
-      StructField("version", IntegerType, nullable = false)))
-    override def call(input: InternalRow): JIterator[Scan] = {
-      val (layer, table) = splitIdent(input.getUTF8String(0))
-      val versions = engine().history(layer, table)
-      Collections.singletonList(new ResultScan(out,
-        versions.map(v => InternalRow(v)).toArray): Scan).iterator()
-    }
-  }
-
   private final class RemoveOrphansProc(engine: () => Catalog)
     extends MaintenanceProc("remove_orphans") {
     override def description(): String =
@@ -593,32 +571,22 @@ object GraftProcedures {
   private final class ExpireVersionsProc(engine: () => Catalog)
     extends MaintenanceProc("expire_versions") {
     override def description(): String =
-      "expire retained time-travel versions beyond the newest `keep` " +
-        "(storage reclamation; the live table is untouched) — " +
-        "Iceberg's expire_snapshots for the directory version store"
+      "expire the commit journal's prefix at or below its retention " +
+        "floor (the newest replace/rollback/genesis record): folded " +
+        "into a checkpoint, records dropped — Iceberg's expire_snapshots"
     override def parameters(): Array[ProcedureParameter] = Array(
       ProcedureParameter.in("table", StringType)
-        .comment("<layer>.<table>").build(),
-      ProcedureParameter.in("keep", IntegerType)
-        .comment("newest versions to retain (>= 0)").build())
+        .comment("<layer>.<table>").build())
     private val out = StructType(Seq(
-      StructField("versions_expired", IntegerType, nullable = false),
-      StructField("bytes_reclaimed", LongType, nullable = false),
       StructField("journal_records_expired", IntegerType,
         nullable = false)))
     override def call(input: InternalRow): JIterator[Scan] = {
       val (layer, table) = splitIdent(input.getUTF8String(0))
-      val eng = engine()
-      val (nv, bytes) =
-        eng.expireVersionsByName(layer, table, input.getInt(1))
-      // journal retention (r15 item 3): fold the prefix at or below
-      // the retention floor into a checkpoint, then drop its records —
-      // assignment/state/feeds read checkpoint + tail from here on
-      val dir = new Path(eng.path(layer, table))
+      val dir = new Path(engine().path(layer, table))
       val fs = dir.getFileSystem(
         SparkSession.active.sparkContext.hadoopConfiguration)
-      val recsDropped = GraftCommits.expire(fs, dir)
-      one(out, InternalRow(nv, bytes, recsDropped))
+      // assignment/state/feeds read checkpoint + tail from here on
+      one(out, InternalRow(GraftCommits.expire(fs, dir)))
     }
   }
 
@@ -653,36 +621,9 @@ object GraftProcedures {
     }
   }
 
-  private final class RollbackProc(engine: () => Catalog)
-    extends MaintenanceProc("rollback") {
-    override def description(): String =
-      "restore a retained version through the catalog write path " +
-        "(layout survives; the replaced state is archived first, so " +
-        "a rollback can be rolled back)"
-    override def parameters(): Array[ProcedureParameter] = Array(
-      ProcedureParameter.in("table", StringType)
-        .comment("<layer>.<table>").build(),
-      ProcedureParameter.in("version", IntegerType)
-        .comment("a version from system.history").build())
-    private val out = StructType(Seq(
-      StructField("restored_version", IntegerType, nullable = false),
-      StructField("files", IntegerType, nullable = false)))
-    override def call(input: InternalRow): JIterator[Scan] = {
-      val (layer, table) = splitIdent(input.getUTF8String(0))
-      val v = input.getInt(1)
-      val eng = engine()
-      eng.restoreVersionByName(layer, table, v)
-      // evidence stays metadata-cheap: a row count here would be a
-      // full scan of a possibly-100TB table for a return value
-      one(out, InternalRow(v, dataFileCount(eng, layer, table)))
-    }
-  }
-
   /** Per-commit rollback ([[GraftCommits.rollbackToCommit]], r14 item
     * 2): restore the file + deletion-vector state as of ANY journaled
-    * batch commit — Iceberg's `rollback_to_snapshot` for the commit
-    * journal, where [[RollbackProc]] covers retained full-replace
-    * versions.
+    * commit — Iceberg's `rollback_to_snapshot` for the commit journal.
     */
   private final class RollbackToCommitProc(engine: () => Catalog)
     extends MaintenanceProc("rollback_to_commit") {

@@ -29,8 +29,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
   *  - an in-flight reader that planned a file before the commit opens
   *    it AFTER: the open fails, and [[FallbackReaderFactory]] re-resolves
   *    the planned (relative path, length) against the tombstone area
-  *    (and the `.__versions` time-travel store, which full-replace
-  *    writes move complete generations into) and reads the SAME BYTES
+  *    and reads the SAME BYTES
   *    from their new location — the scan completes against its planned
   *    pre-commit snapshot. The happy path pays nothing: fallback only
   *    engages on the failure that used to kill the query.
@@ -47,15 +46,12 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
   */
 private[graft] object GraftRetired {
 
-  /** Sibling of the table dir (like `.__lock` / `.__versions`): never
+  /** Sibling of the table dir (like `.__lock`): never
     * part of any data listing, survives whole-directory swaps of the
     * table itself.
     */
   def retiredRoot(tableDir: Path): Path =
     new Path(tableDir.getParent, tableDir.getName + ".__retired")
-
-  def versionsRoot(tableDir: Path): Path =
-    new Path(tableDir.getParent, tableDir.getName + ".__versions")
 
   /** One retiring commit's tombstone directory. Millis prefix makes
     * expiry a name comparison and newest-first resolution a sort.
@@ -159,31 +155,28 @@ private[graft] object GraftRetired {
     (commits, files, bytes)
   }
 
-  /** Resolve a vanished planned file against the tombstone area and the
-    * version store, newest commit first, matched by (relative path,
+  /** Resolve a vanished planned file against the tombstone area,
+    * newest commit first, matched by (relative path,
     * length, mtime) — renames preserve all three, and the mtime keeps
     * two same-rel same-length generations apart. Executor-side; lists
     * only on the failure path.
     */
   def resolve(fs: FileSystem, tableDir: Path, rel: String,
       expectedLen: Long, expectedMtime: Long): Option[Path] = {
-    def candidates(root: Path, newestFirst: Seq[String]): Option[Path] =
-      newestFirst.iterator.map(c => new Path(root, s"$c/$rel")).find { p =>
-        try {
-          val st = fs.getFileStatus(p)
-          st.getLen == expectedLen &&
-            (expectedMtime <= 0 || st.getModificationTime == expectedMtime)
-        } catch { case NonFatal(_) => false }
-      }
-    def dirsOf(root: Path): Seq[String] =
+    val root = retiredRoot(tableDir)
+    val newestFirst =
       try {
         if (!fs.exists(root)) Nil
         else fs.listStatus(root).toSeq.filter(_.isDirectory)
           .map(_.getPath.getName).sorted.reverse
       } catch { case NonFatal(_) => Nil }
-    candidates(retiredRoot(tableDir), dirsOf(retiredRoot(tableDir)))
-      .orElse(candidates(versionsRoot(tableDir),
-        dirsOf(versionsRoot(tableDir)).filter(_.matches("v\\d{6}"))))
+    newestFirst.iterator.map(c => new Path(root, s"$c/$rel")).find { p =>
+      try {
+        val st = fs.getFileStatus(p)
+        st.getLen == expectedLen &&
+          (expectedMtime <= 0 || st.getModificationTime == expectedMtime)
+      } catch { case NonFatal(_) => false }
+    }
   }
 
   private def isMissingFile(t: Throwable): Boolean = {

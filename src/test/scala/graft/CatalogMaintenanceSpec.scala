@@ -166,82 +166,4 @@ class CatalogMaintenanceSpec extends SparkSpec {
     val cat = Catalog(spark, tmpDir("evolve-csv"), "csv")
     intercept[IllegalArgumentException] { cat.readMerged("raw", "t") }
   }
-
-  test("refreshAggregate maintains a keyed sum/count incrementally, versioned") {
-    val cat = Catalog(spark, tmpDir("magg"), versions = 3)
-    def batch(rows: (String, Long)*) =
-      rows.toDF("k", "v").withColumn("cnt", lit(1L))
-    val b1 = batch(("a", 10L), ("a", 5L), ("b", 7L))
-    val b2 = batch(("a", 1L), ("c", 2L))
-    val b3 = batch(("b", 3L), ("c", 4L), ("c", 6L))
-
-    cat.refreshAggregate(b1, "mart", "sums", Seq("k"), Seq("v", "cnt"))
-    cat.refreshAggregate(b2, "mart", "sums", Seq("k"), Seq("v", "cnt"))
-    cat.refreshAggregate(b3, "mart", "sums", Seq("k"), Seq("v", "cnt"))
-
-    val got = cat.read("mart", "sums")
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    // full recompute over the union of all batches
-    val full = b1.unionByName(b2).unionByName(b3)
-      .groupBy(col("k")).agg(sum(col("v")).as("v"), sum(col("cnt")).as("cnt"))
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(got == full, s"incremental=$got full=$full")
-
-    // every refresh archived the previous state: a double-applied delta
-    // is repaired by rolling back one version and re-applying
-    val versions = cat.history("mart", "sums")
-    assert(versions.size >= 2, s"expected archived versions, got $versions")
-    cat.restoreVersion("mart", "sums", versions.max)
-    val restored = cat.read("mart", "sums")
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    // versions.max is the state before the b3 refresh
-    val beforeB3 = b1.unionByName(b2)
-      .groupBy(col("k")).agg(sum(col("v")).as("v"), sum(col("cnt")).as("cnt"))
-      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
-    assert(restored == beforeB3, s"restored=$restored expected=$beforeB3")
-  }
-
-  test("refreshJoin maintains a materialized join view delta-incrementally") {
-    val cat = Catalog(spark, tmpDir("mjoin"))
-    def orders(rows: (Long, Long)*) = rows.toDF("cust_id", "amount")
-    def custs(rows: (Long, String)*) = rows.toDF("cust_id", "region")
-
-    // bootstrap: both deltas, view = dA join dB
-    cat.refreshJoin(Some(orders((1L, 10L), (2L, 20L))),
-      Some(custs((1L, "eu"), (3L, "us"))),
-      "mart", "order_facts", "orders", "custs", Seq("cust_id"))
-    // left-only delta: new orders join the STORED customer base
-    cat.refreshJoin(Some(orders((3L, 30L), (1L, 11L))), None,
-      "mart", "order_facts", "orders", "custs", Seq("cust_id"))
-    // right-only delta: the late customer picks up EARLIER orders
-    cat.refreshJoin(None, Some(custs((2L, "ap"))),
-      "mart", "order_facts", "orders", "custs", Seq("cust_id"))
-    // both sides at once: all three delta terms fire
-    cat.refreshJoin(Some(orders((2L, 21L), (4L, 40L))),
-      Some(custs((4L, "eu"))),
-      "mart", "order_facts", "orders", "custs", Seq("cust_id"))
-
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("cust_id"), col("amount"), col("region"))
-        .as[(Long, Long, String)].collect().sorted.toSeq
-    val full = cat.read("mart", "orders")
-      .join(cat.read("mart", "custs"), Seq("cust_id"))
-    assert(canon(cat.read("mart", "order_facts")) == canon(full),
-      "incremental view drifted from the full recompute")
-    // and the view is not trivially empty — every region matched
-    assert(cat.read("mart", "order_facts").count() == 6)
-  }
-
-  test("refreshJoin over pre-existing bases starts with the full materialization") {
-    val cat = Catalog(spark, tmpDir("mjoin2"))
-    cat.createOrReplace(Seq((1L, 10L)).toDF("k", "v"), "mart", "a")
-    cat.createOrReplace(Seq((1L, "x")).toDF("k", "w"), "mart", "b")
-    cat.refreshJoin(Some(Seq((2L, 20L)).toDF("k", "v")),
-      Some(Seq((2L, "y")).toDF("k", "w")),
-      "mart", "ab", "a", "b", Seq("k"))
-    val got = cat.read("mart", "ab").select(col("k"), col("v"), col("w"))
-      .as[(Long, Long, String)].collect().sorted.toSeq
-    assert(got == Seq((1L, 10L, "x"), (2L, 20L, "y")),
-      s"bootstrap over existing bases must include A_old join B_old, got $got")
-  }
 }

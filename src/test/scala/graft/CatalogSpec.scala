@@ -127,61 +127,35 @@ class CatalogSpec extends SparkSpec {
     cat.read(layer, table).select("k", "v").as[(String, Long)].collect().toSet
 
   test("versioned catalog: history, time travel, retention, rollback") {
-    val cat = Catalog(spark, tmpDir("vcat"), versions = 2)
+    // one history: name-addressed full replaces are journaled commits
+    val cat = Catalog(spark, tmpDir("vcat"))
+    val ident = cat.sqlIdent("dds", "t")
     def replace(k: String, v: Long) =
-      cat.createOrReplace(Seq((k, v)).toDF("k", "v"), "dds", "t")
-    replace("a", 1L) // first write: nothing to archive
-    assert(cat.history("dds", "t").isEmpty)
-    replace("b", 2L) // retains gen1 as v1
-    assert(cat.history("dds", "t") == Seq(1))
+      cat.createOrReplaceByName(Seq((k, v)).toDF("k", "v"), "dds", "t")
+    def at(id: Long): Set[(String, Long)] =
+      spark.sql(s"SELECT k, v FROM $ident VERSION AS OF 'c$id'")
+        .as[(String, Long)].collect().toSet
+    def commits: Seq[(Long, String)] =
+      spark.table(s"$ident.commits").select("commit_id", "kind")
+        .as[(Long, String)].collect().toSeq
+    replace("a", 1L) // c0: the create's append
+    replace("b", 2L) // c1
+    replace("c", 3L) // c2
+    assert(commits == Seq((0L, "append"), (1L, "replace"), (2L, "replace")))
+    assert(readAll2(cat, "dds", "t") == Set(("c", 3L)))
+    assert(at(0) == Set(("a", 1L)) && at(1) == Set(("b", 2L)))
+    // rollback is one more commit, never a deletion: the replaced live
+    // state stays addressable, so a rollback can be rolled back
+    spark.sql(s"CALL ${cat.sqlName}.system.rollback_to_commit(" +
+      "table => 'dds.t', commit => 1)").collect()
     assert(readAll2(cat, "dds", "t") == Set(("b", 2L)))
-    assert(cat.readVersion("dds", "t", 1).select("k", "v")
-      .as[(String, Long)].collect().toSet == Set(("a", 1L)))
-    replace("c", 3L) // v2 = gen2
-    replace("d", 4L) // v3 = gen3; v1 pruned (retention 2)
-    assert(cat.history("dds", "t") == Seq(2, 3))
-    // rollback is one more version, never a deletion: the replaced
-    // live state (gen4) is archived, so rollback can be rolled back
-    cat.restoreVersion("dds", "t", 2)
-    assert(readAll2(cat, "dds", "t") == Set(("b", 2L)))
-    assert(cat.history("dds", "t") == Seq(3, 4))
-    intercept[IllegalArgumentException] {
-      cat.readVersion("dds", "t", 1) // pruned
-    }
-  }
-
-  test("changesBetween reads version diffs as op-tagged changes") {
-    val cat = Catalog(spark, tmpDir("vcat"), versions = 3)
-    cat.createOrReplace(
-      Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), "dds", "t")
-    cat.createOrReplace(
-      Seq(("a", 1L), ("b", 20L), ("c", 3L)).toDF("k", "v"), "dds", "t")
-    // v1 → live: b updated (delete+insert pair), c inserted
-    val ch = cat.changesBetween("dds", "t", from = 1)
-      .select($"k", $"v", $"__op").as[(String, Long, String)]
-      .collect().toSet
-    assert(ch == Set(
-      ("b", 2L, "delete"), ("b", 20L, "insert"), ("c", 3L, "insert")))
-    // identical versions diff to nothing
-    cat.createOrReplace(
-      Seq(("a", 1L), ("b", 20L), ("c", 3L)).toDF("k", "v"), "dds", "t")
-    assert(cat.changesBetween("dds", "t", from = 2).isEmpty)
-  }
-
-  test("a crash between swap and archive still retains the version") {
-    val root = tmpDir("vcat")
-    val cat = Catalog(spark, root, versions = 3)
-    cat.createOrReplace(Seq(("a", 1L)).toDF("k", "v"), "dds", "t")
-    // simulate the narrowest crash: the previous version was moved
-    // aside but never archived — the orphan must become a version on
-    // the next replace, not be deleted
-    Seq(("x", 9L)).toDF("k", "v").write.parquet(s"$root/dds/t.__swapold")
-    cat.createOrReplace(Seq(("b", 2L)).toDF("k", "v"), "dds", "t")
-    assert(cat.history("dds", "t") == Seq(1, 2))
-    assert(cat.readVersion("dds", "t", 1).select("k", "v")
-      .as[(String, Long)].collect().toSet == Set(("x", 9L)))
-    assert(cat.readVersion("dds", "t", 2).select("k", "v")
-      .as[(String, Long)].collect().toSet == Set(("a", 1L)))
+    assert(commits.last == ((3L, "rollback")) && at(2) == Set(("c", 3L)))
+    // retention: expiry folds the journal at or below its floor (the
+    // rollback) — older commits refuse, the floor still time-travels
+    spark.sql(s"CALL ${cat.sqlName}.system.expire_versions('dds.t')")
+      .collect()
+    intercept[Exception] { at(1) }
+    assert(at(3) == Set(("b", 2L)))
   }
 
   test("tableExists probe (S4)") {

@@ -349,27 +349,29 @@ class GraftCatalogSpec extends SparkSpec {
   }
 
   test("VERSION AS OF / TIMESTAMP AS OF resolve retained states; snapshots are read-only") {
-    val (cat, root) = freshCatalog()
-    spark.conf.set(s"spark.sql.catalog.$cat.versions", "3")
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.hist (k BIGINT, v STRING)")
-    spark.sql(s"INSERT INTO $cat.ods.hist VALUES (1, 'a')")
-    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (1, 'b'), (2, 'b')")
-    Thread.sleep(1200) // separate the two archive mtimes + the probe ts
+    spark.sql(s"INSERT INTO $cat.ods.hist VALUES (1, 'a')") // c0
+    val beforeFirst = System.currentTimeMillis() - 60000
+    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (1, 'b'), (2, 'b')") // c1
+    Thread.sleep(1200) // separate the commit times from the probe ts
     val betweenMillis = System.currentTimeMillis()
     Thread.sleep(1200)
-    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (3, 'c')")
+    spark.sql(s"INSERT OVERWRITE $cat.ods.hist VALUES (3, 'c')") // c2
 
-    // live vs versions (history numbering = object API's)
+    // live vs commit snapshots
     assert(spark.table(s"$cat.ods.hist").collect().toSeq == Seq(Row(3L, "c")))
-    val v1 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 1")
+    val c0 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 'c0'")
       .orderBy("k").collect().toSeq
-    assert(v1 == Seq(Row(1L, "a")), s"v1 = $v1")
-    val v2 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 2")
+    assert(c0 == Seq(Row(1L, "a")), s"c0 = $c0")
+    val c1 = spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 'c1'")
       .orderBy("k").collect().toSeq
-    assert(v2 == Seq(Row(1L, "b"), Row(2L, "b")), s"v2 = $v2")
+    assert(c1 == Seq(Row(1L, "b"), Row(2L, "b")), s"c1 = $c1")
 
-    // timestamp between the two replaces resolves to the middle state
+    // a timestamp between the two replaces resolves to the newest
+    // commit at or before it — the journal's commit times, not
+    // directory mtimes
     val atTs = spark.sql(s"SELECT * FROM $cat.ods.hist " +
         s"TIMESTAMP AS OF timestamp_millis(${betweenMillis}L)")
       .orderBy("k").collect().toSeq
@@ -379,97 +381,97 @@ class GraftCatalogSpec extends SparkSpec {
         s"TIMESTAMP AS OF timestamp_millis(${System.currentTimeMillis() + 60000}L)")
       .collect().toSeq
     assert(future == Seq(Row(3L, "c")))
+    // a timestamp before the first commit predates the journal
+    val early = intercept[Exception] {
+      spark.sql(s"SELECT * FROM $cat.ods.hist " +
+        s"TIMESTAMP AS OF timestamp_millis(${beforeFirst}L)").collect()
+    }
+    assert(early.getMessage.contains("predates"), early.getMessage)
 
-    // snapshots refuse writes, missing versions refuse loudly
+    // snapshots refuse writes; integer versions and missing commits
+    // refuse loudly
     val e = intercept[Exception] {
-      spark.sql(s"INSERT INTO $cat.ods.hist VERSION AS OF 1 VALUES (9, 'x')")
+      spark.sql(s"INSERT INTO $cat.ods.hist VERSION AS OF 'c0' VALUES (9, 'x')")
     }
     assert(e != null)
-    val missing = intercept[Exception] {
-      spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 99").collect()
+    val integer = intercept[Exception] {
+      spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 1").collect()
     }
-    assert(missing.getMessage.contains("no retained version"),
+    assert(integer.getMessage.contains("commit-journal ids"),
+      s"got: ${integer.getMessage}")
+    val missing = intercept[Exception] {
+      spark.sql(s"SELECT * FROM $cat.ods.hist VERSION AS OF 'c99'").collect()
+    }
+    assert(missing.getMessage.contains("has no commit 99"),
       s"got: ${missing.getMessage}")
-
-    // object-API history sees the same numbering over the same root
-    val eng = Catalog(spark, root, versions = 3)
-    assert(eng.history("ods", "hist") == Seq(1, 2))
-    assert(eng.readVersion("ods", "hist", 1).collect().toSeq == Seq(Row(1L, "a")))
   }
 
-  test("time travel x round-10 writers: versioning is full-replace-scoped (r10 item 7)") {
-    // CONTRACT: the version store archives COMPLETE previous table
-    // states, which only FULL REPLACES produce — INSERT OVERWRITE (the
-    // V1 swap for plain tables, TruncateReplaceWrite for bucketed /
-    // dynamic-on-unpartitioned ones). Appends, streaming epochs, and
-    // partition-scoped copy-on-write (MERGE/UPDATE/DELETE) do NOT
-    // create versions: their deltas never materialize the prior whole-
-    // table state, and archiving one would mean copying every untouched
-    // partition — the exact cost the partition-scoped paths exist to
-    // avoid. What this spec pins: those writers also never CORRUPT the
-    // store — retained versions resolve unchanged across them, and the
-    // next full replace archives the cumulative state they produced.
+  test("time travel x round-10 writers: every writer commits to the one journal; snapshots stay stable") {
+    // CONTRACT: appends, full replaces, streaming epochs and
+    // partition-scoped copy-on-write (MERGE/UPDATE/DELETE) all land
+    // one record in the table's commit journal, and none of them
+    // disturbs an earlier commit's snapshot — the journal replays each
+    // state from its own adds/removes, preserved in tombstones.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val (cat, root) = freshCatalog()
-    spark.conf.set(s"spark.sql.catalog.$cat.versions", "3")
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.tl (k BIGINT, seg STRING) " +
       "PARTITIONED BY (seg)")
-    spark.sql(s"INSERT INTO $cat.ods.tl VALUES (1, 'a'), (2, 'b')")
-    // full replace #1 archives the initial state as v1
-    spark.sql(s"INSERT OVERWRITE $cat.ods.tl VALUES (1, 'a'), (2, 'b'), (3, 'b')")
-    def v1(): Seq[Row] = spark.sql(
-      s"SELECT * FROM $cat.ods.tl VERSION AS OF 1").orderBy("k").collect().toSeq
-    val v1Before = v1()
-    assert(v1Before == Seq(Row(1L, "a"), Row(2L, "b")))
+    spark.sql(s"INSERT INTO $cat.ods.tl VALUES (1, 'a'), (2, 'b')") // c0
+    spark.sql(s"INSERT OVERWRITE $cat.ods.tl VALUES (1, 'a'), (2, 'b'), (3, 'b')") // c1
+    def snap(id: Long): Seq[Row] = spark.sql(
+      s"SELECT * FROM $cat.ods.tl VERSION AS OF 'c$id'")
+      .orderBy("k").collect().toSeq
+    val c0Before = snap(0)
+    assert(c0Before == Seq(Row(1L, "a"), Row(2L, "b")))
 
-    // a streaming epoch lands (no new version, v1 untouched)
+    // a streaming epoch lands (c2)
     val mem = MemoryStream[(Long, String)]
     val q = mem.toDF().toDF("k", "seg").writeStream
       .option("checkpointLocation", tmpDir("gcat-tl-cp"))
       .toTable(s"$cat.ods.tl")
     mem.addData((4L, "a")); q.processAllAvailable(); q.stop()
-    // a partitioned MERGE rewrites its touched partition (no version)
+    // a partitioned MERGE rewrites its touched partition (c3)
     spark.sql(s"""MERGE INTO $cat.ods.tl t
       USING (SELECT 2L AS k, 'b' AS seg, 222L AS nk) u ON t.k = u.k
       WHEN MATCHED THEN UPDATE SET t.k = u.nk""")
-    val eng = Catalog(spark, root, versions = 3)
-    assert(eng.history("ods", "tl") == Seq(1),
-      "append/streaming/COW writers must not mint versions")
-    assert(v1() == v1Before, "a delta writer corrupted an archived version")
+    val kinds = spark.table(s"$cat.ods.tl.commits")
+      .select("kind").as[String].collect().toSeq
+    assert(kinds == Seq("append", "replace", "stream_epoch", "rewrite"),
+      s"journal: $kinds")
+    assert(snap(0) == c0Before, "a delta writer corrupted an earlier snapshot")
+    val cumulative = Seq(Row(1L, "a"), Row(3L, "b"), Row(4L, "a"), Row(222L, "b"))
     assert(spark.table(s"$cat.ods.tl").orderBy("k").collect().toSeq ==
-      Seq(Row(1L, "a"), Row(3L, "b"), Row(4L, "a"), Row(222L, "b")))
+      cumulative)
+    assert(snap(3) == cumulative)
 
-    // the NEXT full replace archives the cumulative post-delta state
+    // the NEXT full replace leaves the cumulative state addressable
     spark.sql(s"INSERT OVERWRITE $cat.ods.tl VALUES (9, 'z')")
-    assert(eng.history("ods", "tl") == Seq(1, 2))
-    assert(spark.sql(s"SELECT * FROM $cat.ods.tl VERSION AS OF 2")
-      .orderBy("k").collect().toSeq ==
-      Seq(Row(1L, "a"), Row(3L, "b"), Row(4L, "a"), Row(222L, "b")))
+    assert(snap(3) == cumulative)
+    assert(spark.table(s"$cat.ods.tl").collect().toSeq == Seq(Row(9L, "z")))
   }
 
   test("bucketed INSERT OVERWRITE archives versions through the v2 replace (r11)") {
-    val (cat, root) = freshCatalog()
-    spark.conf.set(s"spark.sql.catalog.$cat.versions", "2")
+    val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.dds")
     spark.sql(s"CREATE TABLE $cat.dds.bv (k BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(4, k))")
     spark.sql(s"INSERT INTO $cat.dds.bv SELECT id, id * 10 FROM range(0, 20)")
     spark.sql(s"INSERT OVERWRITE $cat.dds.bv SELECT id, id * 100 FROM range(0, 5)")
     spark.sql(s"INSERT OVERWRITE $cat.dds.bv SELECT id, id * 1000 FROM range(0, 3)")
-    val eng = Catalog(spark, root, versions = 2)
-    assert(eng.history("dds", "bv") == Seq(1, 2))
-    // v1 = the original 20-row state, archived file-by-file with tags
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.dds.bv VERSION AS OF 1")
+    // each replaced generation is tombstoned file-by-file with its
+    // bucket tags and stays addressable through the journal
+    assert(spark.sql(s"SELECT sum(v) FROM $cat.dds.bv VERSION AS OF 'c0'")
       .head.getLong(0) == (0L until 20L).map(_ * 10).sum)
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.dds.bv VERSION AS OF 2")
+    assert(spark.sql(s"SELECT sum(v) FROM $cat.dds.bv VERSION AS OF 'c1'")
       .head.getLong(0) == (0L until 5L).map(_ * 100).sum)
     assert(spark.table(s"$cat.dds.bv").count() == 3)
-    // retention pruned to the newest 2 on the NEXT replace
-    spark.sql(s"INSERT OVERWRITE $cat.dds.bv SELECT id, id FROM range(0, 2)")
-    assert(eng.history("dds", "bv") == Seq(2, 3))
+    // the live table keeps its bucket layout across the replaces
+    assert(spark.table(s"$cat.dds.bv").groupBy().sum("v").head.getLong(0) ==
+      (0L until 3L).map(_ * 1000).sum)
+    assert(spark.table(s"$cat.dds.bv.commits").count() == 3)
   }
 
   test("RENAME COLUMN is metadata-only: old and new files read correctly via field-id aliases (r13 item 8)") {

@@ -487,26 +487,28 @@ class GraftDvSpec extends SparkSpec {
   }
 
   test("object-API path read and archived versions apply vectors (dual addressing, time travel)") {
-    val (cat, root) = freshCatalog(Map("versions" -> "3"))
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.t (k BIGINT, v BIGINT) " +
       s"TBLPROPERTIES ('${GraftDv.ModeKey}' = '${GraftDv.MorValue}')")
-    spark.sql(s"INSERT INTO $cat.ods.t SELECT id, id FROM range(0, 100)")
-    spark.sql(s"DELETE FROM $cat.ods.t WHERE k >= 90")
+    spark.sql(s"INSERT INTO $cat.ods.t SELECT id, id FROM range(0, 100)") // c0
+    spark.sql(s"DELETE FROM $cat.ods.t WHERE k >= 90") // c1: vectors
 
     // object API over the same warehouse dir: one table state
-    val engine = Catalog(spark, root, "parquet", versions = 3)
+    val engine = Catalog(spark, root, "parquet")
     assert(engine.read("ods", "t").count() == 90,
       "path read resurrected merge-on-read deletes")
 
-    // INSERT OVERWRITE archives the generation WITH its vectors
+    // INSERT OVERWRITE tombstones the generation; the journal replays
+    // its deletion state, so the snapshot carries the vectors
     spark.sql(s"INSERT OVERWRITE $cat.ods.t SELECT id, -id FROM range(0, 7)")
     assert(spark.table(s"$cat.ods.t").count() == 7)
-    val snap = spark.sql(s"SELECT count(*) FROM $cat.ods.t VERSION AS OF 1")
-      .head.getLong(0)
-    assert(snap == 90,
-      s"archived version must carry its deletion vectors (got $snap)")
-    assert(engine.readVersion("ods", "t", 1).count() == 90)
+    def snap(id: Int): Long =
+      spark.sql(s"SELECT count(*) FROM $cat.ods.t VERSION AS OF 'c$id'")
+        .head.getLong(0)
+    assert(snap(1) == 90,
+      s"a replaced generation must read with its deletion vectors (got ${snap(1)})")
+    assert(snap(0) == 100)
   }
 
   test("streaming a table with live vectors refuses; ignoreDeletes opts in") {

@@ -255,41 +255,38 @@ class GraftProceduresSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(spark.table(s"$cat.ods.t").count() == 2)
   }
 
-  test("CALL system.history + system.rollback round-trip a bad overwrite") {
+  test("CALL system.rollback_to_commit round-trips a bad overwrite") {
     val (cat, _) = freshCatalog()
-    spark.conf.set(s"spark.sql.catalog.$cat.versions", "3")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.t (id BIGINT, v BIGINT)")
     Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1)
       .createOrReplaceTempView("gpr_rb")
-    spark.sql(s"INSERT INTO $cat.ods.t SELECT * FROM gpr_rb")
-    assert(spark.sql(s"CALL $cat.system.history('ods.t')")
-      .collect().isEmpty) // appends don't version
-    // a bad full overwrite archives the good state as v1
+    spark.sql(s"INSERT INTO $cat.ods.t SELECT * FROM gpr_rb") // c0
+    // a bad full overwrite (c1) tombstones the good state
     spark.sql(s"INSERT OVERWRITE $cat.ods.t SELECT id, CAST(0 AS BIGINT) " +
       "FROM gpr_rb")
-    assert(spark.sql(s"CALL $cat.system.history('ods.t')")
-      .collect().map(_.getInt(0)).toSeq == Seq(1))
+    def commits: Seq[(Long, String)] = spark.table(s"$cat.ods.t.commits")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(commits == Seq((0L, "append"), (1L, "replace")))
     assert(spark.table(s"$cat.ods.t").agg(sum(col("v"))).head.getLong(0) == 0)
 
-    val r = spark.sql(s"CALL $cat.system.rollback('ods.t', version => 1)")
-      .collect()
-    assert(r.length == 1 && r(0).getInt(0) == 1 && r(0).getInt(1) >= 1)
+    val r = spark.sql(s"CALL $cat.system.rollback_to_commit('ods.t', " +
+      "commit => 0)").collect()
+    assert(r.length == 1 && r(0).getInt(0) >= 1 && r(0).getInt(1) >= 1,
+      r.mkString(","))
     // the good rows are live again ...
     assert(spark.table(s"$cat.ods.t").orderBy(col("id"))
       .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq ==
       Seq((1L, 10L), (2L, 20L)))
-    // ... and the bad state was archived, not destroyed: rollback of
+    // ... and the bad state was tombstoned, not destroyed: rollback of
     // the rollback stays possible, VERSION AS OF can still read it
-    assert(spark.sql(s"CALL $cat.system.history('ods.t')")
-      .collect().map(_.getInt(0)).toSeq == Seq(1, 2))
-    assert(spark.sql(s"SELECT sum(v) FROM $cat.ods.t VERSION AS OF 2")
+    assert(commits.last == ((2L, "rollback")))
+    assert(spark.sql(s"SELECT sum(v) FROM $cat.ods.t VERSION AS OF 'c1'")
       .head.getLong(0) == 0)
   }
 
   test("CALL system.expire_versions reclaims old versions, live table untouched") {
     val (cat, root) = freshCatalog()
-    spark.conf.set(s"spark.sql.catalog.$cat.versions", "5")
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.t (id BIGINT, v BIGINT)")
     (1 to 4).foreach { g =>
@@ -297,21 +294,27 @@ class GraftProceduresSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .createOrReplaceTempView("gpr_ev")
       spark.sql(s"INSERT OVERWRITE $cat.ods.t SELECT * FROM gpr_ev")
     }
-    // four archived generations (the initial empty state is v1)
-    assert(spark.sql(s"CALL $cat.system.history('ods.t')")
-      .collect().map(_.getInt(0)).toSeq == Seq(1, 2, 3, 4))
-    val r = spark.sql(s"CALL $cat.system.expire_versions('ods.t', keep => 1)")
+    // four full replaces, one journal commit each (c0..c3); every
+    // replace is a retention floor
+    assert(spark.table(s"$cat.ods.t.commits").count() == 4)
+    assert(spark.sql(s"SELECT v FROM $cat.ods.t VERSION AS OF 'c1'")
+      .head.getLong(0) == 2L)
+    val r = spark.sql(s"CALL $cat.system.expire_versions('ods.t')")
       .collect()
-    assert(r.length == 1 && r(0).getInt(0) == 3 && r(0).getLong(1) > 0L,
-      r.mkString(","))
-    // only the newest survives; it still time-travels; live unchanged
-    assert(spark.sql(s"CALL $cat.system.history('ods.t')")
-      .collect().map(_.getInt(0)).toSeq == Seq(4))
-    assert(spark.sql(s"SELECT v FROM $cat.ods.t VERSION AS OF 4")
-      .head.getLong(0) == 3L)
+    assert(r.length == 1 && r(0).getInt(0) == 4, r.mkString(","))
+    // only the floor's checkpoint survives; it still time-travels;
+    // history below it refuses; live unchanged
+    assert(spark.table(s"$cat.ods.t.commits").collect()
+      .map(_.getString(1)).toSeq == Seq("checkpoint(floor=3)"))
+    assert(spark.sql(s"SELECT v FROM $cat.ods.t VERSION AS OF 'c3'")
+      .head.getLong(0) == 4L)
+    val gone = intercept[Exception] {
+      spark.sql(s"SELECT v FROM $cat.ods.t VERSION AS OF 'c1'").collect()
+    }
+    assert(gone.getMessage.contains("expired"), gone.getMessage)
     assert(spark.table(s"$cat.ods.t").head.getLong(1) == 4L)
-    // idempotent: nothing left beyond the window
-    assert(spark.sql(s"CALL $cat.system.expire_versions('ods.t', keep => 1)")
+    // idempotent: nothing left at or below the floor
+    assert(spark.sql(s"CALL $cat.system.expire_versions('ods.t')")
       .head.getInt(0) == 0)
   }
 
@@ -320,8 +323,10 @@ class GraftProceduresSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val names = spark.sql(s"SHOW PROCEDURES IN $cat.system")
       .select("procedure_name").as[String].collect().toSet
     assert(Set("analyze", "cluster", "compact", "compact_partitions",
-      "expire_versions", "history", "remove_orphans", "rollback")
+      "expire_versions", "remove_orphans", "rollback_to_commit")
       .subsetOf(names), names.toString)
+    assert(!names.contains("history") && !names.contains("rollback"),
+      names.toString)
     val desc = spark.sql(s"DESCRIBE PROCEDURE $cat.system.analyze")
       .collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("analyze"))

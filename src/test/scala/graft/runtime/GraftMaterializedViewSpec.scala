@@ -392,16 +392,17 @@ class GraftMaterializedViewSpec extends SparkSpec {
   }
 
   test("journal-incarnation identity: a base swap (compact) refuses the incremental fold; full re-bootstraps (ADVICE r16 high)") {
-    val (cat, _) = freshCatalog()
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE NAMESPACE $cat.mart")
     spark.sql(s"CREATE TABLE $cat.ods.sw (k BIGINT, v BIGINT, s STRING)")
     spark.sql(s"INSERT INTO $cat.ods.sw VALUES (1, 10, 'x'), (2, 20, 'y')")
     spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.swm AS " +
       s"SELECT s, count(*) AS n, sum(v) AS sv FROM $cat.ods.sw GROUP BY s")
-    // a full-directory swap restarts the journal incarnation: ids
-    // restart at 0 and the recorded position means nothing anymore
-    spark.sql(s"CALL $cat.system.compact('ods.sw')").collect()
+    // a full-directory swap (the object API's path-addressed compact)
+    // restarts the journal incarnation: ids restart at 0 and the
+    // recorded position means nothing anymore
+    graft.runtime.Catalog(spark, root).compact("ods", "sw")
     spark.sql(s"INSERT INTO $cat.ods.sw VALUES (3, 30, 'x')")
     val e = intercept[Exception] {
       spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
@@ -462,5 +463,29 @@ class GraftMaterializedViewSpec extends SparkSpec {
     // DROP MATERIALIZED VIEW removes the sidecar dir too
     spark.sql(s"DROP MATERIALIZED VIEW $cat.mart.svm")
     assert(!fs.exists(side.getParent), "DROP must remove the .__mv dir")
+  }
+
+  test("a high-cardinality group key leaves the backing unpartitioned; refresh stays exact") {
+    val (cat, root) = freshCatalog()
+    spark.sql(s"CREATE NAMESPACE $cat.ods")
+    spark.sql(s"CREATE NAMESPACE $cat.mart")
+    spark.sql(s"CREATE TABLE $cat.ods.h (k BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ods.h SELECT id % 100, id FROM range(0, 300)")
+    spark.sql(s"CREATE MATERIALIZED VIEW $cat.mart.hk AS " +
+      s"SELECT k, count(*) AS n, sum(v) AS sv FROM $cat.ods.h GROUP BY k")
+    // 100 groups: one directory per group would cost one file per
+    // touched group per refresh — the backing stays one plain table
+    val dir = new org.apache.hadoop.fs.Path(s"$root/mart/hk")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.listStatus(dir).exists(_.getPath.getName.startsWith("k=")),
+      "a 100-group key must not partition the backing")
+    spark.sql(s"INSERT INTO $cat.ods.h SELECT id % 100, id FROM range(300, 400)")
+    spark.sql(s"CALL $cat.system.refresh_materialized_view(" +
+      "table => 'mart.hk')").collect()
+    val got = spark.table(s"$cat.mart.hk").select(col("k"), col("n"), col("sv"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = (0L until 100L).map(k =>
+      (k, 4L, (0L until 4L).map(i => k + 100 * i).sum)).toSet
+    assert(got == want)
   }
 }

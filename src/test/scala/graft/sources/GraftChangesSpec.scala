@@ -22,14 +22,12 @@ class GraftChangesSpec extends SparkSpec {
   import spark.implicits._
 
   private var n = 0
-  private def freshCatalog(versions: Int = 0): (String, String) = {
+  private def freshCatalog(): (String, String) = {
     n += 1
     val name = s"gch${n}_${System.nanoTime()}"
     val root = tmpDir(s"graft-ch-$name")
     spark.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
-    if (versions > 0)
-      spark.conf.set(s"spark.sql.catalog.$name.versions", versions.toString)
     (name, root)
   }
 
@@ -520,7 +518,7 @@ class GraftChangesSpec extends SparkSpec {
   }
 
   test("metadata relations: files answers from listings, history tracks retained versions") {
-    val (cat, root) = freshCatalog(versions = 3)
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.t (k BIGINT, seg STRING) " +
       "PARTITIONED BY (seg)")
@@ -575,16 +573,16 @@ class GraftChangesSpec extends SparkSpec {
     assert(partsTouched("seg=B") && !partsTouched("seg=A"),
       s"stale rollup handling wrong: $partsTouched")
 
+    // the table's history is its commit journal: one row per commit
     spark.sql(s"INSERT OVERWRITE $cat.ods.t VALUES (9, 'C')")
-    val hist = spark.table(s"$cat.ods.t.history").collect().map { r =>
-      (if (r.isNullAt(0)) -1 else r.getInt(0), r.getBoolean(1))
-    }.toSeq
-    assert(hist == Seq((1, false), (-1, true)),
+    val hist = spark.table(s"$cat.ods.t.commits").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getBoolean(7))).toSeq
+    assert(hist == Seq((0L, "append", true), (1L, "replace", true)),
       s"history mismatch: $hist")
-    // and timestamps are publish-ordered
-    val ts = spark.table(s"$cat.ods.t.history")
+    // and commit times are commit-ordered
+    val ts = spark.table(s"$cat.ods.t.commits")
       .collect().map(_.getTimestamp(2).getTime).toSeq
-    assert(ts == ts.sorted, s"history not publish-ordered: $ts")
+    assert(ts == ts.sorted, s"history not commit-ordered: $ts")
 
     // an unknown metadata relation is a missing table, not a crash
     val miss = intercept[Exception] {
@@ -823,19 +821,20 @@ class GraftChangesSpec extends SparkSpec {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.r (k BIGINT, v BIGINT)")
-    spark.sql(s"INSERT INTO $cat.ods.r VALUES (1, 10)")
-    // the full replace swaps the directory — journal and all: history
-    // resets (Delta's overwrite-under-CDF posture, loud not silent)
+    spark.sql(s"INSERT INTO $cat.ods.r VALUES (1, 10)") // c0
+    // the full replace journals a `replace` FLOOR record (c1): the rows
+    // it superseded are not row-level history (Delta's
+    // overwrite-under-CDF posture, loud not silent)
     spark.sql(s"INSERT OVERWRITE $cat.ods.r VALUES (5, 50), (6, 60)")
     assert(spark.table(s"$cat.ods.r.changes").collect().isEmpty,
       "post-replace feed should be empty until the next commit")
-    // the next commit claims the replaced generation under a genesis
-    // floor: its rows are accounted but not row-level servable
+    // the next commit (c2) is served; the replaced generation's rows
+    // are accounted under the floor but not row-level servable
     spark.sql(s"INSERT INTO $cat.ods.r VALUES (7, 70)")
     val feed = spark.table(s"$cat.ods.r.changes")
       .select(col("_change_epoch"), col("k"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(feed == Seq((1L, 7L)), s"post-replace feed: $feed")
+    assert(feed == Seq((2L, 7L)), s"post-replace feed: $feed")
     val e = intercept[Exception] {
       spark.table(s"$cat.ods.r.changes")
         .where(col("_change_epoch") >= 0).collect()
@@ -881,7 +880,7 @@ class GraftChangesSpec extends SparkSpec {
   }
 
   test("batch changelog streams: incremental commit delivery, restart exactly-once, replaced-journal refusal") {
-    val (cat, _) = freshCatalog()
+    val (cat, root) = freshCatalog()
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     spark.sql(s"CREATE TABLE $cat.ods.s (k BIGINT, v BIGINT)")
     spark.sql(s"INSERT INTO $cat.ods.s VALUES (1, 10), (2, 20)")
@@ -919,9 +918,11 @@ class GraftChangesSpec extends SparkSpec {
     assert(all.count(_._1 == 0L) == 2 && net1 == Map(2L -> -1),
       s"restart delivery: $all")
 
-    // a full replace swaps the journal: the checkpoint's history is
-    // gone — the restarted stream refuses loudly
-    spark.sql(s"INSERT OVERWRITE $cat.ods.s VALUES (9, 90)")
+    // an object-API full replace swaps the whole directory, journal
+    // included: the checkpoint's history is gone — the restarted
+    // stream refuses loudly
+    graft.runtime.Catalog(spark, root)
+      .createOrReplace(Seq((9L, 90L)).toDF("k", "v"), "ods", "s")
     spark.sql(s"INSERT INTO $cat.ods.s VALUES (8, 80)")
     val q3 = run()
     val e = intercept[Exception] { q3.processAllAvailable(); q3.stop() }

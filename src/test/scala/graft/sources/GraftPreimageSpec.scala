@@ -158,15 +158,36 @@ class GraftPreimageSpec extends SparkSpec {
     spark.sql(s"CREATE NAMESPACE $cat.ods")
     mor(s"CREATE TABLE $cat.ods.t (k BIGINT, v BIGINT, seg STRING)")
     spark.sql(s"INSERT INTO $cat.ods.t SELECT id, id * 10, 'a' " +
-      "FROM range(0, 100)")
-    spark.sql(s"UPDATE $cat.ods.t SET v = v + 7 WHERE k % 10 = 3")
+      "FROM range(0, 100)") // c0
+    spark.sql(s"UPDATE $cat.ods.t SET v = v + 7 WHERE k % 10 = 3") // c1
+    val dir = new Path(s"$root/ods/t")
+    val captured = GraftCommits.list(fsOf(root), dir).last
+    assert(captured.id == 1L && captured.pre.nonEmpty,
+      s"the mor UPDATE captured no preimage sidecars: $captured")
+    spark.sql(s"CALL $cat.system.rollback_to_commit('ods.t', commit => 0)")
+      .collect()
+    // the rollback writes a FLOOR record above the captured commit
+    val floor = GraftCommits.list(fsOf(root), dir).last
+    assert(floor.id == 2L && floor.kind == "rollback" && floor.isFloor,
+      s"expected a rollback floor record at c2, got $floor")
+    assert(spark.table(s"$cat.ods.t").where("k % 10 = 3")
+      .select("v").collect().map(_.getLong(0)).toSet ==
+      (0 until 10).map(i => (i * 10 + 3) * 10L).toSet,
+      "the rollback did not restore the pre-UPDATE values")
+    // explicit bounds at or below the floor refuse loudly
     val ex = intercept[Exception] {
-      spark.sql(s"CALL $cat.system.rollback('ods.t', 1)")
-      // a rollback writes a FLOOR record: explicit bounds at or below
-      // it refuse; the unbounded read serves only what's above
       spark.table(s"$cat.ods.t.changes")
-        .where("_change_epoch <= 1").collect()
+        .where("_change_epoch <= 2").collect()
     }
-    assert(ex.getMessage != null)
+    assert(ex.getMessage.contains("not row-level servable"),
+      s"wrong floor refusal: ${ex.getMessage}")
+    // the unbounded read serves only commits above the floor: the
+    // captured c1 sidecars are unreferenced, never served
+    assert(feedRows(cat).isEmpty, "the feed served rolled-back history")
+    spark.sql(s"UPDATE $cat.ods.t SET v = v + 1 WHERE k = 5") // c3
+    val after = feedRows(cat).map(r =>
+      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).sorted
+    assert(after == Seq((3L, "update_postimage", 5L, 51L),
+      (3L, "update_preimage", 5L, 50L)), s"post-floor feed: $after")
   }
 }
